@@ -5,6 +5,8 @@ import java.time.{Duration, Instant}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.interp.GridBuilder
+
 /** Windowed fetch over a time-partitioned grid dataset — the Spark shape of
   * the reference's production entry point `df_from_dask`
   * (`kamodo_dask/kamodo_dask.py:185-298`, SURVEY §3 E1).
@@ -65,9 +67,7 @@ final class GridReader(
     * listing instead of listing the directory a second time.
     */
   def axisValuesFrom(path: String, column: String): Array[Double] =
-    read(Seq(path))
-      .select(col(column).cast("double")).distinct()
-      .orderBy(column).collect().map(_.getDouble(0))
+    GridBuilder.axis(read(Seq(path)), column)
 
   /** Fetch a `[start,end] × [hLo,hHi]` window as a long-form DataFrame with
     * a provenance-derived `time` column. Request validation follows the

@@ -1,7 +1,9 @@
 package graft
 
 import java.time.{Duration, Instant}
+import java.util.Arrays
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.api.GridFields
@@ -395,16 +397,96 @@ class GridEngineSpec extends SparkSuite {
       GridFixtures.temperature(t0s + 300.0, 100.0, 40.0, 300000.0)) < 1e-6)
   }
 
+  /** Builds `rows` as a `(t, u) → v` grid, expecting it to be rejected. */
+  private def rejected(rows: DataFrame): IllegalArgumentException =
+    intercept[IllegalArgumentException] {
+      GridBuilder.fromLongForm(rows, Seq("v"), Seq("t", "u"))
+    }
+
   test("GridBuilder rejects duplicate-plus-missing axis combinations") {
     import spark.implicits._
-    // count matches 2×2 but (1,1) is missing and (1,0) duplicated
-    val bad = Seq(
-      (0.0, 0.0, 1.0), (0.0, 1.0, 2.0), (1.0, 0.0, 3.0), (1.0, 0.0, 4.0))
-      .toDF("t", "u", "v")
-    val ex = intercept[IllegalArgumentException] {
-      GridBuilder.fromLongForm(bad, Seq("v"), Seq("t", "u"))
+    val dense = Seq((0.0, 0.0, 1.0), (0.0, 1.0, 2.0), (1.0, 0.0, 3.0))
+    // count matches 2×2 but (1,1) is missing and (1,0) duplicated; then
+    // short by one row
+    Seq(dense :+ ((1.0, 0.0, 4.0)), dense).foreach { rows =>
+      spark.catalog.clearCache()
+      val msg = rejected(rows.toDF("t", "u", "v")).getMessage
+      assert(msg.contains("not dense"), rows)
+      // a failed build releases whatever it cached
+      assert(spark.sharedState.cacheManager.isEmpty, rows)
     }
-    assert(ex.getMessage.contains("not dense"))
+  }
+
+  test("GridBuilder rejects a null or NaN axis coordinate") {
+    import spark.implicits._
+    Seq(None, Some(Double.NaN)).foreach { bad =>
+      val df = Seq((Some(0.0), 0.0, 1.0), (bad, 1.0, 2.0)).toDF("t", "u", "v")
+      assert(rejected(df).getMessage.contains("null or NaN"), s"t = $bad")
+      val ex = intercept[IllegalArgumentException](GridBuilder.axis(df, "t"))
+      assert(ex.getMessage.contains("null or NaN"), s"t = $bad")
+    }
+  }
+
+  test("GridBuilder folds a -0.0 coordinate onto the 0.0 plane") {
+    import spark.implicits._
+    val df = Seq(
+      (0.0, 0.0, 1.0), (-0.0, 1.0, 2.0), (1.0, 0.0, 3.0), (1.0, 1.0, 4.0))
+      .toDF("t", "u", "v")
+    val g = GridBuilder.fromLongForm(df, Seq("v"), Seq("t", "u"))("v")
+    assert(Arrays.equals(g.axes(0), Array(0.0, 1.0)))
+    assert(g.values.toSeq == Seq(1.0, 2.0, 3.0, 4.0))
+    assert(Arrays.equals(GridBuilder.axis(df, "t"), Array(0.0, 1.0)))
+  }
+
+  test("GridBuilder turns a null or NaN value into fillValue") {
+    import spark.implicits._
+    val df = Seq((0.0, 0.0, Some(1.0)), (0.0, 1.0, None),
+      (1.0, 0.0, Some(Double.NaN)), (1.0, 1.0, Some(4.0)))
+      .toDF("t", "u", "v")
+    val g = GridBuilder.fromLongForm(df, Seq("v"), Seq("t", "u"),
+      fillValue = -7.0)("v")
+    assert(g.values.toSeq == Seq(1.0, -7.0, -7.0, 4.0))
+  }
+
+  test("GridBuilder builds a fetched window in one job with no shuffle") {
+    val df = reader.fetch(GridFixtures.t0, GridFixtures.t0.plusSeconds(7200),
+      250000.0, 400000.0)
+    val (grids, work) = sparkWork {
+      GridBuilder.fromLongForm(df, Seq("T[K]", "rho[kg/m^3]"))
+    }
+    assert(work.jobs == 1, s"${work.jobs} jobs")
+    assert(work.shuffleBytes == 0L, s"${work.shuffleBytes} shuffle bytes written")
+    assert(grids("T[K]").values.length == 13 * 19 * 9 * 13)
+  }
+
+  test("GridBuilder is order-invariant and exact at the grid nodes") {
+    val df = reader.fetch(GridFixtures.t0, GridFixtures.t0.plusSeconds(3600),
+      250000.0, 400000.0)
+    val vars = Seq("T[K]", "rho[kg/m^3]")
+    val builds = Seq(df, df.repartition(7), df.orderBy(rand(42)))
+      .map(GridBuilder.fromLongForm(_, vars))
+    val base = builds.head
+    builds.tail.foreach { b =>
+      vars.foreach { v =>
+        assert(b(v).axes.length == base(v).axes.length)
+        b(v).axes.zip(base(v).axes).foreach { case (x, y) =>
+          assert(Arrays.equals(x, y), v)
+        }
+        assert(Arrays.equals(b(v).values, base(v).values), v)
+      }
+    }
+    val axes = base("T[K]").axes
+    assert(Arrays.equals(axes(0), Array.tabulate(7)(i => t0s + 600.0 * i)))
+    assert(Arrays.equals(axes(1), GridFixtures.lonAxis))
+    assert(Arrays.equals(axes(2), GridFixtures.latAxis))
+    assert(Arrays.equals(axes(3), GridFixtures.hAxis))
+    // bit-identical to the analytic field at every node, in C order
+    val nodes = for (t <- axes(0); lo <- axes(1); la <- axes(2); h <- axes(3))
+      yield (t, lo, la, h)
+    val expectT = nodes.map { case (t, lo, la, h) => GridFixtures.temperature(t, lo, la, h) }
+    val expectRho = nodes.map { case (t, lo, la, h) => GridFixtures.rho(t, lo, la, h) }
+    assert(Arrays.equals(base("T[K]").values, expectT))
+    assert(Arrays.equals(base("rho[kg/m^3]").values, expectRho))
   }
 
   test("broadcast interpolator: null coordinate yields fillValue") {

@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -43,34 +40,9 @@ class ScaleShapeSpec extends SparkSuite {
       .repartition(4, col("doc_id"))
   }
 
-  /** Total shuffle-write records across all stages of `body`. Listener
-    * events are asynchronous: poll until the counter is stable for a few
-    * consecutive checks (records are deterministic, so "stable" means
-    * "delivered", not "approximately done").
-    */
-  private def shuffleRecords(body: => Unit): Long = {
-    val acc = new AtomicLong(0L)
-    val listener = new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        acc.addAndGet(
-          sc.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      var last = -1L
-      var stable = 0
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (stable < 3 && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        val now = acc.get()
-        if (now == last) stable += 1 else { stable = 0; last = now }
-      }
-      acc.get()
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-    }
-  }
+  /** Total shuffle-write records across all stages of `body`. */
+  private def shuffleRecords(body: => Unit): Long =
+    sparkWork(body)._2.shuffleRecords
 
   test("dd2 pipeline shuffle records grow ~linearly in corpus size") {
     def run(n: Int): (Long, Long) = {
