@@ -1507,7 +1507,7 @@ object Relational {
     // parsed back out of a filename-shaped string built with the
     // reference's `<prefix>%Y-%m-%dT%H:%M:%S<postfix>` template
     // (kamodo_dask.py:66-67). Round-trips format → extract → parse, the
-    // exact mechanism GridReader.withFileTime uses on input_file_name().
+    // exact mechanism GridStream.cadenceStream uses on input_file_name().
     "q12_file_time" -> ((s, dir) => {
       Tables.events(s, dir)
         .select(col("event_id"),

@@ -2,8 +2,14 @@ package graft.source
 
 import java.time.{Duration, Instant}
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType, TimestampType}
 
 import graft.interp.GridBuilder
 
@@ -16,22 +22,25 @@ import graft.interp.GridBuilder
   * one declarative plan:
   *
   * {{{
-  * spark.read.parquet(prunedPaths: _*)
-  *   .filter(col("h").between(snapLo, snapHi))   // BEFORE the time column:
-  *   .withColumn("time",                         // input_file_name() is
-  *     to_timestamp(regexp_extract(              // nondeterministic and
-  *       input_file_name(), TS, 1)))             // blocks pushdown through it
+  * spark.read.format(format).load(prunedPaths: _*)  // Spark lists + infers
+  *   // location := one partition per GridFile, value time = GridFile.ts
+  *   .filter(col("h").between(snapLo, snapHi))      // pushed to the scan
   * }}}
   *
   * Deliberate, semantics-preserving divergences from the reference
   * (SURVEY §7.4):
-  *   - time comes from file provenance (`input_file_name`), not from
-  *     positional `np.repeat` over collected row order
-  *     (`kamodo_dask.py:278-287`) — order-independent, shuffle-safe, and
-  *     correct for ragged cadences (missing timesteps);
+  *   - time comes from file provenance, not from positional `np.repeat`
+  *     over collected row order (`kamodo_dask.py:278-287`) —
+  *     order-independent, shuffle-safe, and correct for ragged cadences
+  *     (missing timesteps). Each file's timestamp is the UTC instant
+  *     [[GridCatalog.discover]] parsed from its name (the one `prune` selects
+  *     by), served as a partition value: the scan appends it as a constant
+  *     column, with no per-row string work and no session-time-zone parse;
   *   - the h-filter is a Catalyst predicate, so it pushes down to parquet
   *     row-group statistics instead of running after a full read
-  *     (`kamodo_dask.py:247-249` filters post-scan);
+  *     (`kamodo_dask.py:247-249` filters post-scan). `time` is a
+  *     deterministic partition column, so the h-filter reaches the scan
+  *     wherever it sits in the plan, and a `time` predicate prunes files;
   *   - no hand-rolled retry/rebalance loop (`kamodo_dask.py:259-276`) —
   *     Spark task retry + AQE already cover it.
   *
@@ -47,6 +56,7 @@ final class GridReader(
     options: Map[String, String] = Map.empty) {
 
   import GridCatalog._
+  import GridReader._
 
   private def read(paths: Seq[String]) =
     spark.read.format(format).options(options).load(paths: _*)
@@ -92,21 +102,78 @@ final class GridReader(
     require(pruned.nonEmpty, s"no grid files in window [$s,$e]")
     val (snapLo, snapHi) =
       snapOutward(axisValuesFrom(all.head.path, hColumn), hLo, hHi)
-    // filter BEFORE the provenance-time projection: input_file_name() is
-    // nondeterministic, and Catalyst refuses to push any predicate through
-    // a nondeterministic projection — filtering after withFileTime left
-    // the h BETWEEN predicate above the scan (no PushedFilters, every row
-    // group decompressed; caught by a plan audit, then pinned by
-    // GridEngineSpec's pushdown assertion)
-    withFileTime(read(pruned.map(_.path))
-      .filter(col(hColumn).cast("double").between(snapLo, snapHi)))
+    window(pruned).filter(col(hColumn).cast("double").between(snapLo, snapHi))
   }
 
-  /** R1 reformulated: derive each row's timestep from the file it came
-    * from, not from collected row position.
+  /** R1 reformulated: `files` read as one relation whose partition column
+    * `time` holds each row's file timestamp ([[GridFile.ts]]), not a
+    * value derived from collected row position. Spark resolves the files
+    * (listing, schema, format, options); only the relation's file index is
+    * swapped for one that tags each file's leaf files with its timestamp.
     */
-  def withFileTime(df: DataFrame, timeColumn: String = "time"): DataFrame =
-    df.withColumn(timeColumn,
-      to_timestamp(regexp_extract(input_file_name(), TsRegex, 1),
-        "yyyy-MM-dd'T'HH:mm:ss"))
+  def window(files: Seq[GridFile]): DataFrame =
+    read(files.map(_.path)).queryExecution.analyzed match {
+      case LogicalRelation(rel: HadoopFsRelation, _, _, _, _) =>
+        require(rel.partitionSchema.isEmpty,
+          s"grid files under $dir carry partition columns " +
+            rel.partitionSchema.fieldNames.mkString(", "))
+        val index = new WindowIndex(spark, files, rel.location)
+        spark.baseRelationToDataFrame(rel.copy(
+          location = index, partitionSchema = index.partitionSchema)(
+          rel.sparkSession))
+      case plan =>
+        throw new IllegalArgumentException(
+          s"format $format does not read as a file relation: ${plan.nodeName}")
+    }
+}
+
+object GridReader {
+
+  /** A fixed window of grid files: one partition per [[GridFile]], holding
+    * the leaf files Spark listed under it, with the file's timestamp as the
+    * partition value.
+    */
+  private final class WindowIndex(spark: SparkSession,
+      files: Seq[GridCatalog.GridFile], listed: FileIndex)
+      extends FileIndex {
+
+    override val partitionSchema: StructType =
+      StructType(Seq(StructField("time", TimestampType)))
+
+    private val partitions: Seq[PartitionDirectory] = {
+      // Spark lists qualified paths; the grid files share one directory
+      val fs = new Path(files.head.path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val owner = files.map(f => fs.makeQualified(new Path(f.path)) -> f).toMap
+      def ownerOf(leaf: Path): GridCatalog.GridFile =
+        Iterator.iterate(leaf)(_.getParent).takeWhile(_ != null)
+          .flatMap(owner.get).nextOption().getOrElse(throw new IllegalStateException(
+            s"listed file $leaf lies under none of the window's grid files"))
+      val leaves = listed.listFiles(Nil, Nil).flatMap(_.files).groupBy(l => ownerOf(l.getPath))
+      files.flatMap(f => leaves.get(f).map(ls =>
+        PartitionDirectory(InternalRow(DateTimeUtils.instantToMicros(f.ts)), ls)))
+    }
+
+    override def rootPaths: Seq[Path] = listed.rootPaths
+
+    /** Applies the partition filters here: `FileSourceStrategy` does not
+      * re-apply them after the scan.
+      */
+    override def listFiles(partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      if (partitionFilters.isEmpty) partitions
+      else {
+        val keep = Predicate.createInterpreted(partitionFilters.reduce(And).transform {
+          case a: AttributeReference => BoundReference(0, a.dataType, a.nullable)
+        })
+        keep.initialize(0)
+        partitions.filter(p => keep.eval(p.values))
+      }
+
+    override def inputFiles: Array[String] =
+      partitions.flatMap(_.files.map(_.getPath.toString)).toArray
+
+    override def refresh(): Unit = ()
+
+    override def sizeInBytes: Long = partitions.flatMap(_.files).map(_.getLen).sum
+  }
 }

@@ -23,8 +23,11 @@ object GridStream {
 
   /** File-cadence source: stream the time-partitioned directory, deriving
     * each row's timestep from its file name (the same provenance rule as
-    * the batch [[graft.source.GridReader.withFileTime]] — order- and
-    * trigger-independent).
+    * the batch [[graft.source.GridReader.window]] — order- and
+    * trigger-independent). Unlike the batch relation, this parses the
+    * timestamp out of `input_file_name()` on every row: a streaming file
+    * source lists new files itself each trigger and cannot take the batch
+    * reader's per-file index.
     */
   def cadenceStream(
       spark: SparkSession,
@@ -96,9 +99,7 @@ object GridStream {
         val reader = new graft.source.GridReader(spark, dir)
         val files = reader.files().takeRight(keepSteps)
         if (files.nonEmpty) {
-          val df = reader.withFileTime(
-            spark.read.parquet(files.map(_.path): _*))
-          onRefresh(GridFields.fromDataFrame(df))
+          onRefresh(GridFields.fromDataFrame(reader.window(files)))
         }
       }
   }

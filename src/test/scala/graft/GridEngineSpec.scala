@@ -4,6 +4,8 @@ import java.time.{Duration, Instant}
 import java.util.Arrays
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
 import graft.api.GridFields
@@ -61,13 +63,16 @@ class GridEngineSpec extends SparkSuite {
     val hVals = df.select("h").distinct().collect().map(_.getDouble(0)).sorted
     assert(hVals.head == 250000.0 && hVals.last == 400000.0) // snapped outward
     // the snapped h range must reach the parquet scan as PushedFilters —
-    // filtering after the (nondeterministic) input_file_name projection
-    // silently blocks pushdown and decompresses every row group
+    // a nondeterministic projection below the filter (an input_file_name
+    // time column) silently blocks pushdown and decompresses every row group
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters") &&
       plan.contains("GreaterThanOrEqual(h,250000.0)") &&
       plan.contains("LessThanOrEqual(h,400000.0)"),
       s"h filter not pushed to the scan:\n$plan")
+    // time is a per-file partition value, not a per-row parse of the path
+    assert(!plan.contains("input_file_name") && !plan.contains("regexp_extract"),
+      s"time derived per row:\n$plan")
     val times = df.select("time").distinct().count()
     assert(times == 7)
     // every row's value matches the analytic field at its (file-derived) time
@@ -89,6 +94,54 @@ class GridEngineSpec extends SparkSuite {
     val ts = df.select(col("time").cast("double")).distinct()
       .collect().map(_.getDouble(0)).sorted
     assert(!ts.contains(t0s + 5 * 600.0))
+  }
+
+  /** The file scan of `df`'s executed plan (the final plan once adaptive
+    * execution has run it).
+    */
+  private def fileScan(df: DataFrame): FileSourceScanExec = {
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    plan.collectFirst { case s: FileSourceScanExec => s }
+      .getOrElse(fail(s"no file scan in\n$plan"))
+  }
+
+  test("a time filter on a fetched window prunes files in the scan") {
+    val df = reader.fetch(GridFixtures.t0, GridFixtures.t0.plusSeconds(7200),
+      260000.0, 390000.0)
+    val cut = GridFixtures.t0.plusSeconds(3600)
+    val later = df.filter(col("time") >= lit(GridCatalog.toTimestamp(cut)))
+      .select(col("time").cast("double"), col("lon"), col("lat"), col("h"),
+        col("rho[kg/m^3]"))
+    val rows = later.collect()
+    val scan = fileScan(later)
+    assert(scan.partitionFilters.nonEmpty, s"no PartitionFilters:\n$scan")
+    assert(scan.metrics("numFiles").value == 7, scan.metrics("numFiles"))
+    assert(rows.length == 7 * 19 * 9 * 13)
+    assert(rows.map(_.getDouble(0)).distinct.sorted.sameElements(
+      (6 to 12).map(i => t0s + 600.0 * i)))
+    rows.foreach { r =>
+      val want = GridFixtures.rho(r.getDouble(0), r.getDouble(1), r.getDouble(2),
+        r.getDouble(3))
+      assert(math.abs(r.getDouble(4) - want) <= 1e-24, r)
+    }
+  }
+
+  test("time axis is the files' UTC instants under a non-UTC session zone") {
+    // a zone-less stamp parsed in the session zone would shift every
+    // timestep by the zone's offset (+14400 s in April in New York)
+    val ny = spark.newSession()
+    ny.conf.set("spark.sql.session.timeZone", "America/New_York")
+    val r = new GridReader(ny, dir)
+    val files = r.files().take(3)
+    val kd = GridFields.fromDataFrame(
+      r.fetch(files.head.ts, files.last.ts, 260000.0, 390000.0))
+    val want = files.map(_.ts.getEpochSecond.toDouble).toArray
+    assert(Arrays.equals(kd.grid("rho").axes(0), want),
+      s"${kd.grid("rho").axes(0).mkString(",")} != ${want.mkString(",")}")
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
   }
 
   test("CSV grid source: same window fetch through format=csv") {
