@@ -2,7 +2,7 @@ package graft.interp
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.udf
+import org.apache.spark.sql.functions.{array, lit, udf, when}
 
 import graft.model.RegularGrid
 
@@ -26,22 +26,17 @@ final class BroadcastInterpolator(bc: Broadcast[RegularGrid]) extends Serializab
     * [[JoinInterpolator]]'s out-of-hull semantics) instead of reaching the
     * UDF, where a null array element would either NPE or unbox to 0.0.
     */
-  def applySeq(cols: Seq[Column]): Column = {
-    import org.apache.spark.sql.functions.{array, lit, when}
-    val g = bc
-    val f = udf((p: Seq[Double]) => g.value.interpolate(p.toArray))
-    when(cols.map(_.isNull).reduce(_ || _), lit(g.value.fillValue))
-      .otherwise(f(array(cols: _*)))
-  }
+  def applySeq(cols: Seq[Column]): Column = eval(cols)(_.interpolate(_))
 
   /** [[applySeq]]'s nearest-neighbor sibling — evaluates
     * [[graft.model.RegularGrid.interpolateNearest]] over the same
     * broadcast grid with the same null/out-of-hull fill semantics.
     */
-  def applyNearestSeq(cols: Seq[Column]): Column = {
-    import org.apache.spark.sql.functions.{array, lit, when}
+  def applyNearestSeq(cols: Seq[Column]): Column = eval(cols)(_.interpolateNearest(_))
+
+  private def eval(cols: Seq[Column])(method: (RegularGrid, Array[Double]) => Double): Column = {
     val g = bc
-    val f = udf((p: Seq[Double]) => g.value.interpolateNearest(p.toArray))
+    val f = udf((p: Seq[Double]) => method(g.value, p.toArray))
     when(cols.map(_.isNull).reduce(_ || _), lit(g.value.fillValue))
       .otherwise(f(array(cols: _*)))
   }

@@ -49,15 +49,16 @@ object GridBuilder {
 
   val DefaultAxes: Seq[String] = Seq("time", "lon", "lat", "h")
 
-  /** Sorted distinct values of one axis column (cast to double), in one
-    * shuffle-free job: each task sorts its partition's values, the driver
-    * merges the tiny per-partition sets.
+  /** Sorted distinct values of each listed axis column (cast to double), in
+    * one shuffle-free job: each task sorts its partition's values per axis,
+    * the driver merges the tiny per-partition sets. Coordinates follow
+    * [[fromLongForm]]: `-0.0` is the `0.0` plane, null or NaN fails.
     */
-  def axis(df: DataFrame, column: String): Array[Double] = {
-    val parts = perPartition(df.select(col(column).cast("double")), "GridBuilder.axis") {
-      rows => sortedDistinct(readColumns(rows, 1, 1)(0))
-    }
-    mergeAxis(column, parts)
+  def axes(df: DataFrame, columns: Seq[String]): Array[Array[Double]] = {
+    val d = columns.length
+    val parts = perPartition(df.select(columns.map(c => col(c).cast("double")): _*),
+      "GridBuilder.axes") { rows => readColumns(rows, d, d).map(sortedDistinct) }
+    Array.tabulate(d)(k => mergeAxis(columns(k), parts.map(_(k))))
   }
 
   /** One partition's columns: `coords(k)` and `values(v)` per row, plus the

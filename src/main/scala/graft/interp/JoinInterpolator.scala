@@ -71,7 +71,7 @@ object JoinInterpolator {
     *                  columns (double; time = epoch seconds)
     * @param grid      long-form dense grid `(time, lon, lat, h, value…)`
     * @param axes      the 4 sorted distinct axis arrays (time, lon, lat, h)
-    *                  — tiny; from [[GridBuilder.axis]]
+    *                  — tiny; from [[GridBuilder.axes]]
     * @return one row per input point: `idCol` + one interpolated column per
     *         value column (same names)
     */

@@ -1,11 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.interp.JoinInterpolator
+import graft.interp.{BroadcastInterpolator, GridBuilder, JoinInterpolator}
 import graft.util.Fs
 
 /** The core grid-engine operator under the oracle gate: join-mode
@@ -24,29 +24,13 @@ object GridQueries {
   private val fracs: Seq[(Int, Double)] =
     (0 until 10).map(i => i -> (0.05 + 0.1 * i))
 
-  /** Loud bound for the fused axis collects (VERDICT r14 ask #6): the
-    * g3/g4/g5 single-collect axis extraction moves |cells| (the PRODUCT
-    * of axis cardinalities) to the driver instead of Σ|axis| — bounded
-    * by construction today (≤72 cells), but a future wider grid must
-    * fail with a named limit instead of OOMing the driver (g5's density
-    * guard's discipline). 100k cells ≈ a few MB of doubles — the same
-    * driver tier as the other bounded collects.
+  /** The events table bucketed to a 10-minute cadence: one row per
+    * bucket start `t` (epoch seconds, double) with the given aggregates.
     */
-  private val AxisCollectMaxCells = 100000
-
-  /** `df.collect()` guarded by [[AxisCollectMaxCells]] in ONE bounded
-    * job: `limit(bound+1)` short-circuits, so an over-bound grid pays a
-    * bounded scan and a loud error, never an unbounded driver copy.
-    */
-  private[graft] def collectCellsBounded(df: DataFrame,
-      what: String): Array[org.apache.spark.sql.Row] = {
-    val rows = df.limit(AxisCollectMaxCells + 1).collect()
-    require(rows.length <= AxisCollectMaxCells,
-      s"$what grid has over $AxisCollectMaxCells cells — the fused " +
-        "axis collect is driver-tier by construction; split the axis " +
-        "extraction back into per-axis distinct jobs for this grid")
-    rows
-  }
+  private def tenMinuteSeries(s: SparkSession, dir: String)(aggs: Column*): DataFrame =
+    Tables.events(s, dir)
+      .groupBy((floor(unix_timestamp(col("ts")) / 600) * 600).cast("double").as("t"))
+      .agg(aggs.head, aggs.tail: _*)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "g5_e2e_fetch" -> ((s, dir) => g5(s, dir)),
@@ -54,12 +38,8 @@ object GridQueries {
     "g1_interp_1d" -> ((s, dir) => {
       import s.implicits._
       // 10-min bucketed series = dense 1-D grid (t in epoch seconds)
-      val series = Tables.events(s, dir)
-        .groupBy((floor(unix_timestamp(col("ts")) / 600) * 600)
-          .cast("double").as("t"))
-        .agg(avg("value").as("v"))
-        .persist()
-      val axis = series.select("t").orderBy("t").collect().map(_.getDouble(0))
+      val series = tenMinuteSeries(s, dir)(avg("value").as("v")).persist()
+      val axis = GridBuilder.axes(series, Seq("t"))(0)
       val (tMin, tMax) = (axis.head, axis.last)
       val probes = fracs.map { case (i, f) =>
         (i.toLong, tMin + f * (tMax - tMin))
@@ -84,12 +64,9 @@ object GridQueries {
     // the same small-cell fold g1 already hash-matches.
     "g6_interp_multivar" -> ((s, dir) => {
       import s.implicits._
-      val series = Tables.events(s, dir)
-        .groupBy((floor(unix_timestamp(col("ts")) / 600) * 600)
-          .cast("double").as("t"))
-        .agg(avg("value").as("v1"), max("value").as("v2"))
+      val series = tenMinuteSeries(s, dir)(avg("value").as("v1"), max("value").as("v2"))
         .persist()
-      val axis = series.select("t").orderBy("t").collect().map(_.getDouble(0))
+      val axis = GridBuilder.axes(series, Seq("t"))(0)
       val (tMin, tMax) = (axis.head, axis.last)
       val probes = fracs.map { case (i, f) =>
         (i.toLong, tMin + f * (tMax - tMin))
@@ -117,10 +94,7 @@ object GridQueries {
     // factor.
     "g7_unit_convert" -> ((s, dir) => {
       import s.implicits._
-      val series = Tables.events(s, dir)
-        .groupBy((floor(unix_timestamp(col("ts")) / 600) * 600)
-          .cast("double").as("t"))
-        .agg(avg("value").as("rho[kg/m^3]"))
+      val series = tenMinuteSeries(s, dir)(avg("value").as("rho[kg/m^3]"))
       val gf = graft.api.GridFields.fromDataFrame(series, axisCols = Seq("t"))
       val conv = gf.convert("rho", "g/cm^3")
       require(conv.units("rho") == "g/cm^3", "conversion must retag units")
@@ -151,9 +125,8 @@ object GridQueries {
             .cast("double").as("t"),
           (col("user_id") % 4).cast("double").as("u"))
         .agg(avg("value").as("v"))
-      val grid = graft.interp.GridBuilder
-        .fromLongForm(series, Seq("v"), Seq("t", "u"))("v")
-      val bi = graft.interp.BroadcastInterpolator(s, grid)
+      val grid = GridBuilder.fromLongForm(series, Seq("v"), Seq("t", "u"))("v")
+      val bi = BroadcastInterpolator(s, grid)
       val (tA, uA) = (grid.axes(0), grid.axes(1))
       val tProbes = fracs.map { case (i, f) =>
         (i.toLong, tA.head + f * (tA.last - tA.head))
@@ -171,15 +144,10 @@ object GridQueries {
     // RegularGrid + BroadcastInterpolator under the hash gate.
     "g2_interp_broadcast" -> ((s, dir) => {
       import s.implicits._
-      val series = Tables.events(s, dir)
-        .groupBy((floor(unix_timestamp(col("ts")) / 600) * 600)
-          .cast("double").as("t"))
-        .agg(avg("value").as("v"))
-      val rows = series.orderBy("t").collect()
-      val axis = rows.map(_.getDouble(0))
-      val grid = new graft.model.RegularGrid(
-        Array(axis), rows.map(_.getDouble(1)))
-      val bi = graft.interp.BroadcastInterpolator(s, grid)
+      val series = tenMinuteSeries(s, dir)(avg("value").as("v"))
+      val grid = GridBuilder.fromLongForm(series, Seq("v"), Seq("t"))("v")
+      val bi = BroadcastInterpolator(s, grid)
+      val axis = grid.axes(0)
       val (tMin, tMax) = (axis.head, axis.last)
       fracs.map { case (i, f) => (i.toLong, tMin + f * (tMax - tMin)) }
         .toDF("id", "t")
@@ -197,15 +165,10 @@ object GridQueries {
     // certifies the tie rule, not just the easy interior cases.
     "g12_interp_nearest" -> ((s, dir) => {
       import s.implicits._
-      val series = Tables.events(s, dir)
-        .groupBy((floor(unix_timestamp(col("ts")) / 600) * 600)
-          .cast("double").as("t"))
-        .agg(avg("value").as("v"))
-      val rows = series.orderBy("t").collect()
-      val axis = rows.map(_.getDouble(0))
-      val grid = new graft.model.RegularGrid(
-        Array(axis), rows.map(_.getDouble(1)))
-      val bi = graft.interp.BroadcastInterpolator(s, grid)
+      val series = tenMinuteSeries(s, dir)(avg("value").as("v"))
+      val grid = GridBuilder.fromLongForm(series, Seq("v"), Seq("t"))("v")
+      val bi = BroadcastInterpolator(s, grid)
+      val axis = grid.axes(0)
       val (tMin, tMax) = (axis.head, axis.last)
       fracs.map { case (i, f) => (i.toLong, tMin + f * (tMax - tMin)) }
         .toDF("id", "t")
@@ -232,14 +195,8 @@ object GridQueries {
           (length(col("event_type")) % 2).cast("double").as("q"))
         .agg(avg("value").as("v"))
         .persist()
-      // ONE collect for all four axes (was one distinct+sort job per
-      // axis — four actions): the persisted series is 72 cells, so the
-      // axis extraction is a driver-side distinct over materialized rows
-      val cells = collectCellsBounded(
-        series.select("t", "u", "p", "q"), "g4")
-      def axis(i: Int): Array[Double] =
-        cells.map(_.getDouble(i)).distinct.sorted
-      val (tA, uA, pA, qA) = (axis(0), axis(1), axis(2), axis(3))
+      val axes = GridBuilder.axes(series, Seq("t", "u", "p", "q"))
+      val Array(tA, uA, pA, qA) = axes
       val probes = fracs.map { case (i, f) =>
         (i.toLong,
           tA.head + f * (tA.last - tA.head),
@@ -249,7 +206,7 @@ object GridQueries {
       }.toDF("id", "t", "u", "p", "q")
       QueryCache.resultThenRelease(
         JoinInterpolator.interpolate(
-          probes, "id", series, Array(tA, uA, pA, qA), valueCols = Seq("v"),
+          probes, "id", series, axes, valueCols = Seq("v"),
           coordCols = Seq("t", "u", "p", "q")),
         series)
     }),
@@ -266,13 +223,8 @@ object GridQueries {
           (col("user_id") % 4).cast("double").as("u"))
         .agg(avg("value").as("v"))
         .persist()
-      // ONE collect for both axes (was one distinct+sort job per axis):
-      // the persisted series is |cells|-bounded, so the axis extraction
-      // is a driver-side distinct over rows already materialized — the
-      // same values the per-axis jobs produced, two fewer actions
-      val cells = collectCellsBounded(series.select("t", "u"), "g3")
-      val tAxis = cells.map(_.getDouble(0)).distinct.sorted
-      val uAxis = cells.map(_.getDouble(1)).distinct.sorted
+      val axes = GridBuilder.axes(series, Seq("t", "u"))
+      val Array(tAxis, uAxis) = axes
       val probes = fracs.map { case (i, f) =>
         (i.toLong,
           tAxis.head + f * (tAxis.last - tAxis.head),
@@ -280,7 +232,7 @@ object GridQueries {
       }.toDF("id", "t", "u")
       QueryCache.resultThenRelease(
         JoinInterpolator.interpolate(
-          probes, "id", series, Array(tAxis, uAxis), valueCols = Seq("v"),
+          probes, "id", series, axes, valueCols = Seq("v"),
           coordCols = Seq("t", "u")),
         series)
     }),
@@ -397,7 +349,8 @@ object GridQueries {
     * timestamp parse (GridCatalog), PRUNE to a requested window that
     * excludes the first timestep, fetch with snap-outward h widening
     * (1.3..5.6 snaps to planes 1..6, dropping h=0 and h=7) and
-    * provenance-derived time (input_file_name), then bilinear-interpolate
+    * provenance-derived time (each file's timestamp, served as a
+    * partition value), then bilinear-interpolate
     * over the fetched window through the corner join. Previously each
     * stage was spec-verified; this row makes the composed path
     * hash-checked (the oracle recomputes the same window + snap + 4-corner
@@ -471,11 +424,8 @@ object GridQueries {
       .select(col("time").cast("double").as("tc"),
         col("h").cast("double").as("h"), col("v"))
       .persist()
-    // ONE collect for both axes (g3's fusion): the persisted fetch
-    // window is |planes|·8 cells, driver-side distinct is free
-    val cells = collectCellsBounded(fetched.select("tc", "h"), "g5")
-    val tA = cells.map(_.getDouble(0)).distinct.sorted
-    val hA = cells.map(_.getDouble(1)).distinct.sorted
+    val axes = GridBuilder.axes(fetched, Seq("tc", "h"))
+    val Array(tA, hA) = axes
     val probes = fracs.map { case (i, f) =>
       (i.toLong,
         tA.head + f * (tA.last - tA.head),
@@ -483,7 +433,7 @@ object GridQueries {
     }.toDF("id", "tc", "h")
     QueryCache.resultThenRelease(
       JoinInterpolator.interpolate(
-        probes, "id", fetched, Array(tA, hA), valueCols = Seq("v"),
+        probes, "id", fetched, axes, valueCols = Seq("v"),
         coordCols = Seq("tc", "h")),
       series, fetched)
   }

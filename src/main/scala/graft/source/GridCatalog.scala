@@ -4,7 +4,7 @@ import java.sql.Timestamp
 import java.time.format.DateTimeFormatter
 import java.time.{Duration, Instant, LocalDateTime, ZoneOffset}
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, Path, RawLocalFileSystem}
 import org.apache.spark.sql.SparkSession
 
 /** Discovery + pruning of a time-partitioned grid dataset: one parquet
@@ -66,6 +66,22 @@ object GridCatalog {
       }
     }.sortBy(_.ts)
   }
+
+  /** Per-read options that let a read of `dir` open the reference's flat
+    * colon-named `<ts>.parquet` files. Hadoop's checksummed local
+    * filesystem builds each file's `.<name>.crc` sidecar path from the
+    * bare name, which a colon turns into a URI scheme, so the read fails;
+    * these options serve that one read through `RawLocalFileSystem`
+    * (uncached, so the swap stays scoped to the read). Empty for any other
+    * filesystem, and no session conf is written.
+    */
+  def localReadOptions(spark: SparkSession, dir: String): Map[String, String] =
+    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration) match {
+      case _: ChecksumFileSystem => Map(
+        "fs.file.impl" -> classOf[RawLocalFileSystem].getName,
+        "fs.file.impl.disable.cache" -> "true")
+      case _ => Map.empty
+    }
 
   /** Manual partition pruning: keep files with start <= ts <= end
     * (reference `fetch_file_range`, `kamodo_dask.py:63-86`).

@@ -59,25 +59,10 @@ final class GridReader(
   import GridReader._
 
   private def read(paths: Seq[String]) =
-    spark.read.format(format).options(options).load(paths: _*)
+    spark.read.format(format).options(localReadOptions(spark, dir))
+      .options(options).load(paths: _*)
 
   def files(): Seq[GridFile] = discover(spark, dir, prefix, postfix)
-
-  /** Sorted distinct values of a grid axis column, read once from the
-    * first file (each file holds the full spatial grid — reference
-    * invariant, `kamodo_dask.py:279`). Small enough to collect.
-    */
-  def axisValues(column: String): Array[Double] = {
-    val fs = files()
-    require(fs.nonEmpty, s"no grid files found under $dir")
-    axisValuesFrom(fs.head.path, column)
-  }
-
-  /** Axis values from a specific file — lets [[fetch]] reuse its own
-    * listing instead of listing the directory a second time.
-    */
-  def axisValuesFrom(path: String, column: String): Array[Double] =
-    GridBuilder.axis(read(Seq(path)), column)
 
   /** Fetch a `[start,end] × [hLo,hHi]` window as a long-form DataFrame with
     * a provenance-derived `time` column. Request validation follows the
@@ -100,8 +85,10 @@ final class GridReader(
     }
     val pruned = prune(all, s, e)
     require(pruned.nonEmpty, s"no grid files in window [$s,$e]")
+    // each file holds the full spatial grid (reference invariant,
+    // `kamodo_dask.py:279`), so the first one carries the whole h axis
     val (snapLo, snapHi) =
-      snapOutward(axisValuesFrom(all.head.path, hColumn), hLo, hHi)
+      snapOutward(GridBuilder.axes(read(Seq(all.head.path)), Seq(hColumn))(0), hLo, hHi)
     window(pruned).filter(col(hColumn).cast("double").between(snapLo, snapHi))
   }
 

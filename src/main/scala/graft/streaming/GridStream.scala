@@ -43,6 +43,7 @@ object GridStream {
     val qualified = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .makeQualified(p).toString
     spark.readStream
+      .options(GridCatalog.localReadOptions(spark, dir))
       .schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .option("recursiveFileLookup", "true")

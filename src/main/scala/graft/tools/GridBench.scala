@@ -70,7 +70,7 @@ object GridBench {
     // join mode: corner-join plan, no grid broadcast
     val gridDf = df.withColumn("time", col("time").cast("double")).persist()
     val axes = Array(
-      GridBuilder.axis(gridDf, "time"), GridFixtures.lonAxis,
+      GridBuilder.axes(gridDf, Seq("time"))(0), GridFixtures.lonAxis,
       GridFixtures.latAxis, GridFixtures.hAxis)
     val (jn, jSec) = time {
       JoinInterpolator.interpolate(
