@@ -69,7 +69,7 @@ object Bench {
 
     // SPARK_GRAFT_NO_MEMO=1: bypass the session query-result memos so
     // every run measures its raw pipeline end-to-end (the honest
-    // per-query measurement switch — see QueryCache.memoDisabled)
+    // per-query measurement switch — see QueryCache.memoized)
     if (sys.env.get("SPARK_GRAFT_NO_MEMO").contains("1"))
       spark.conf.set("spark.graft.memo.disabled", "true")
 

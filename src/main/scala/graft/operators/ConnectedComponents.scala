@@ -59,11 +59,10 @@ object ConnectedComponents {
     * checkpoint, convergence count) — ~1-2 s of pure driver/scheduler
     * latency for a graph of a few dozen edges, which is the organic
     * regime of every gated near-dup graph (dd8/dd14/mm7: tens of pairs
-    * at sf0.1, ≤ PairMemoMaxRows by the same duplicate-structure bound
-    * that sizes the session memo). Past the bound, or for non-long id
-    * columns, the Pregel loop runs unchanged — no scale cliff: 200k
-    * collected edges ≈ 3 MB, the same driver tier memoClusters already
-    * holds.
+    * at sf0.1, within the same [[DriverTier]] bound that sizes the
+    * session memo). Past the bound, or for non-long id columns, the
+    * Pregel loop runs unchanged — no scale cliff: 200k collected edges
+    * ≈ 3 MB, the same driver tier the memoized component map holds.
     *
     * The emitted (node, label) SET is identical to [[components]]'s by
     * construction (label = min node id reachable; OperatorPropertySpec

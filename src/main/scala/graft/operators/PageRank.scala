@@ -59,14 +59,6 @@ object PageRank {
     runWithStats(edges, damping, iters, requireFullDegree,
       checkpointEvery = checkpointEvery, driverMaxEdges = driverMaxEdges)._1
 
-  /** Default edge ceiling for the driver-tier fast path — the same
-    * duplicate-structure driver tier [[ConnectedComponents.componentsBounded]]
-    * and the session pair memo already hold (≈3 boxed values per edge →
-    * a few MB at the bound; the bounded `limit(n+1)` probe short-circuits,
-    * so an over-bound graph pays one bounded scan, not a full pass).
-    */
-  val DriverTierMaxEdges: Long = 200000L
-
   /** [[run]] plus an optional residual-based early exit, returning
     * `(ranks, iterationsRun)`.
     *

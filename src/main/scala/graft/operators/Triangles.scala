@@ -15,13 +15,6 @@ import scala.collection.mutable
   */
 object Triangles {
 
-  /** Edge ceiling for the driver tier — the same duplicate-structure
-    * driver-tier bound [[ConnectedComponents.componentsBounded]] and
-    * PageRank's `DriverTierMaxEdges` hold (200k two-long rows ≈ 3 MB).
-    * Past it the caller's distributed formula runs unchanged.
-    */
-  val DriverTierMaxEdges: Long = 200000L
-
   /** Count triangles of the distinct undirected edge list `edges` (each
     * unordered pair exactly once) under DEGREE orientation — the same
     * enumeration the distributed formula runs: each edge points

@@ -7,7 +7,7 @@ import graft.Tables
 import graft.functions.HashFunctions._
 import graft.functions.TextFunctions.tokens
 import graft.operators.{AdaptiveCap, BandedPairs, BucketCap,
-  ConnectedComponents, IncrementalDedup}
+  ConnectedComponents, DriverTier, IncrementalDedup}
 
 /** Deduplication operator family over the `documents` table — the first
   * stage of any 100 TB training-corpus pipeline: exact dedup, n-gram
@@ -449,203 +449,88 @@ object Dedup {
     (pairs, cap, caches)
   }
 
-  /** Driver-tier bound for the session memo below: a corpus whose
-    * near-dup pair list exceeds this is past what a driver copy should
-    * hold, so the memo declines and hands back the live distributed
-    * frame instead (the count that decides is free — the pair frame is
-    * already persisted for the components fan-out).
+  /** The near-dup pair list, its containment twin and their component
+    * map, memoized per corpus in [[QueryCache.memoized]] (its scaladoc
+    * holds the key, the raw switch and the fallback contract): dd2, dd8,
+    * dd9, dd14 and dd15 share one capped shingle-candidate pass, dd12
+    * shares the same candidate machinery's containment scores, and dd8
+    * and dd14 share one component fold. Unlike the ten-row ANN
+    * shortlists these are bounded by the corpus' DUPLICATE structure, not
+    * by construction, hence the driver-tier bound.
     */
-  private val PairMemoMaxRows = 200000L
+  private[graft] val MemoKinds =
+    Set("jaccard_pairs", "containment_pairs", "neardup_clusters")
 
-  /** Session-scoped memo for the near-dup pair list and its component
-    * map (the ANN-shortlist pattern, `Similarity.memoTier`): within one
-    * JVM the capped shingle-candidate machinery runs ONCE per (corpus
-    * dir, shuffle layout) whether dd2, dd8, dd9, dd14, or dd15 asks,
-    * and the ConnectedComponents fold over the pairs runs once whether
-    * dd8 or dd14 asks. A production dedup materializes exactly these
-    * two frames to a parquet sidecar and feeds every downstream stage
-    * (cluster formation, canonical pick, edit-distance review, leakage
-    * audit) from the materialization — the memo emulates that
-    * compute-once contract in-session. Unlike the 10-row ANN
-    * shortlists the pair list is bounded by the corpus' DUPLICATE
-    * structure, not by construction, hence the [[PairMemoMaxRows]]
-    * guard. The memo key includes the shuffle-partition setting so the
-    * partition-invariance sweep still exercises the real machinery
-    * under its changed layout.
+  /** One pair list + the cap it used, memoized under `kind`. The third
+    * element is the frames the CALLER must release after materializing
+    * its result — empty on the memo path, the live persisted pair frame
+    * past the bound. `maxRows` is injectable so the spec can force the
+    * fallback (the 100 TB path) on the driver fixture and pin it
+    * result-identical.
     */
-  private val dedupMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String, String),
-      (org.apache.spark.sql.types.StructType,
-        Seq[org.apache.spark.sql.Row], Long)]
+  private def memoPairs(s: SparkSession, dir: String, kind: String,
+      maxRows: Long)(pairsWithCaches: => (DataFrame, Long, Seq[DataFrame]))
+      : (DataFrame, Long, Seq[DataFrame]) = {
+    val (frames, cap, rel) = QueryCache.memoized(s, dir, kind, maxRows) {
+      bound =>
+        val (p, cap, caches) = pairsWithCaches
+        val (pairs, n) = QueryCache.persistCounted(p, caches)
+        if (n <= bound) {
+          val v = try QueryCache.snapshot(pairs)
+          finally pairs.unpersist(blocking = false)
+          Right((Seq(v), cap))
+        } else Left((Seq(pairs), cap, Seq(pairs)))
+    }
+    (frames.head, cap, rel)
+  }
 
-  private def memoKey(s: SparkSession, dir: String, kind: String) =
-    (dir, kind, s.conf.get("spark.sql.shuffle.partitions", ""))
-
-  /** The dd2 pair list (i, j, jac) + the cap it used, memoized. The
-    * third element is the frames the CALLER must release after
-    * materializing its result — empty on the memo path, the live
-    * persisted pair frame on the over-bound fallback path. `maxRows`
-    * is injectable so the spec can force the fallback (the 100 TB
-    * path) on the driver fixture and pin it result-identical.
-    */
+  /** The dd2 pair list (i, j, jac), memoized ([[memoPairs]]). */
   private[graft] def memoJaccardPairs(s: SparkSession, dir: String,
-      maxRows: Long = PairMemoMaxRows)
-      : (DataFrame, Long, Seq[DataFrame]) = {
-    import scala.jdk.CollectionConverters._
-    // the raw-measurement switch: bypass lookup AND store, forcing the
-    // over-bound (live-frame) contract every call
-    val effMaxRows = if (QueryCache.memoDisabled(s)) -1L else maxRows
-    val key = memoKey(s, dir, "jaccard_pairs")
-    (if (QueryCache.memoDisabled(s)) None else dedupMemo.get(key)) match {
-      case Some((schema, rows, cap)) =>
-        (s.createDataFrame(rows.asJava, schema), cap, Nil)
-      case None =>
-        val (p, cap, caches) = shingleJaccardPairsWithCaches(s, dir)
-        val pairs = p.persist()
-        // failure path (QueryCache.resultThenRelease's discipline): a job
-        // error mid-build must not strand the corpus-sized caches for
-        // the rest of the session
-        val n = try {
-          val n0 = pairs.count() // populates the cache either way
-          caches.foreach(_.unpersist(blocking = false))
-          n0
-        } catch {
-          case e: Throwable =>
-            pairs.unpersist(blocking = false)
-            caches.foreach(_.unpersist(blocking = false))
-            throw e
-        }
-        if (n <= effMaxRows) {
-          val v = try (pairs.schema, pairs.collect().toSeq, cap)
-          finally pairs.unpersist(blocking = false)
-          dedupMemo.put(key, v)
-          (s.createDataFrame(v._2.asJava, v._1), cap, Nil)
-        } else (pairs, cap, Seq(pairs))
-    }
-  }
+      maxRows: Long = DriverTier.MaxRows): (DataFrame, Long, Seq[DataFrame]) =
+    memoPairs(s, dir, "jaccard_pairs", maxRows)(
+      shingleJaccardPairsWithCaches(s, dir))
 
-  /** The dd12 pair list (i, j, cont_permille) + the cap it used,
-    * memoized — [[memoJaccardPairs]]' compute-once contract extended to
-    * the containment family (VERDICT r14 ask #1): dd12 runs the SAME
-    * capped shingle-candidate machinery as dd2
-    * ([[shingleCandidatesFromDocs]], one definition — candBounds is
-    * byte-identical by construction) and was the heaviest
-    * non-memoized row of the suite; a production dedup materializes the
-    * candidate frame once and feeds both score families from it. Same
-    * driver-tier bound, same release contract, same raw-measurement
-    * bypass (Bench re-times dd12 raw) as the Jaccard memo.
-    */
+  /** The dd12 pair list (i, j, cont_permille), memoized ([[memoPairs]]). */
   private[graft] def memoContainmentPairs(s: SparkSession, dir: String,
-      maxRows: Long = PairMemoMaxRows)
-      : (DataFrame, Long, Seq[DataFrame]) = {
-    import scala.jdk.CollectionConverters._
-    val effMaxRows = if (QueryCache.memoDisabled(s)) -1L else maxRows
-    val key = memoKey(s, dir, "containment_pairs")
-    (if (QueryCache.memoDisabled(s)) None else dedupMemo.get(key)) match {
-      case Some((schema, rows, cap)) =>
-        (s.createDataFrame(rows.asJava, schema), cap, Nil)
-      case None =>
-        val (p, cap, caches) = containmentPairsWithCaches(s, dir)
-        val pairs = p.persist()
-        val n = try {
-          val n0 = pairs.count()
-          caches.foreach(_.unpersist(blocking = false))
-          n0
-        } catch {
-          case e: Throwable =>
-            pairs.unpersist(blocking = false)
-            caches.foreach(_.unpersist(blocking = false))
-            throw e
-        }
-        if (n <= effMaxRows) {
-          val v = try (pairs.schema, pairs.collect().toSeq, cap)
-          finally pairs.unpersist(blocking = false)
-          dedupMemo.put(key, v)
-          (s.createDataFrame(v._2.asJava, v._1), cap, Nil)
-        } else (pairs, cap, Seq(pairs))
-    }
-  }
+      maxRows: Long = DriverTier.MaxRows): (DataFrame, Long, Seq[DataFrame]) =
+    memoPairs(s, dir, "containment_pairs", maxRows)(
+      containmentPairsWithCaches(s, dir))
 
   /** The component map over [[memoJaccardPairs]] — (node, label) for
     * every doc incident to a near-dup pair — memoized under the same
-    * guard (the map has ≤ 2·|pairs| rows, the same driver tier).
-    * Same release contract and injectable bound as
-    * [[memoJaccardPairs]].
+    * bound, with the same release contract.
     */
   private[graft] def memoClusters(s: SparkSession, dir: String,
-      maxRows: Long = PairMemoMaxRows)
-      : (DataFrame, Seq[DataFrame]) = {
-    import scala.jdk.CollectionConverters._
-    val key = memoKey(s, dir, "neardup_clusters")
-    // under the raw-measurement switch memoJaccardPairs hands back live
-    // frames, so the rel.isEmpty store arm below never runs either
-    (if (QueryCache.memoDisabled(s)) None else dedupMemo.get(key)) match {
-      case Some((schema, rows, _)) =>
-        (s.createDataFrame(rows.asJava, schema), Nil)
-      case None =>
-        val (pairs, _, rel) = memoJaccardPairs(s, dir, maxRows)
+      maxRows: Long = DriverTier.MaxRows): (DataFrame, Seq[DataFrame]) = {
+    val (frames, _, rel) =
+      QueryCache.memoized(s, dir, "neardup_clusters", maxRows) { bound =>
+        // under the raw switch (bound −1) the pair list comes back live,
+        // so the store arm below never runs
+        val (pairs, _, rel) = memoJaccardPairs(s, dir, bound)
         // componentsBounded: the pair frame is persisted (or already a
         // local relation on the memo path), so the bounded probe is
-        // cheap, and a ≤ PairMemoMaxRows graph — the organic regime —
-        // folds on the driver instead of paying 4-6 job submissions per
+        // cheap, and a driver-tier graph — the organic regime — folds on
+        // the driver instead of paying 4-6 job submissions per
         // propagation round; past the bound the Pregel loop runs as
         // before (same labels either way — OperatorPropertySpec pins it)
-        val comp = try ConnectedComponents.componentsBounded(
-          pairs.select("i", "j"), "i", "j", maxRows = PairMemoMaxRows)
-        catch {
-          case e: Throwable =>
-            rel.foreach(_.unpersist(blocking = false))
-            throw e
+        val comp = QueryCache.releasingOnFailure(rel) {
+          ConnectedComponents.componentsBounded(
+            pairs.select("i", "j"), "i", "j", maxRows = DriverTier.MaxRows)
         }
         if (rel.isEmpty) {
-          // pairs fit the driver tier, so the map does too: collect it
+          // pairs fit the driver tier, so the map does too: snapshot it
           // and free the components' final checkpoint (normally the
-          // caller-owned block; here the memo is the caller) — on the
-          // failure path too
-          val v = try (comp.schema, comp.collect().toSeq, 0L)
+          // caller-owned block; here the memo is the caller)
+          val v = try QueryCache.snapshot(comp)
           finally graft.operators.Checkpoints.free(comp)
-          dedupMemo.put(key, v)
-          (s.createDataFrame(v._2.asJava, v._1), Nil)
-        } else {
-          // fallback (over-bound pairs, or the raw-measurement switch):
-          // the map is ≤ 2·|pairs| rows but pairs may be past the driver
-          // tier, so count it first (cheap — comp is checkpointed) and
-          // hold a driver copy only when it fits. The copy lets the
-          // components' checkpoint blocks be freed HERE instead of
-          // leaking for the session (clearCache cannot free LogicalRDD
-          // storage — see Checkpoints); nothing is stored in the memo,
-          // so the raw-measurement contract is untouched. A genuinely
-          // over-bound map stays live with caller-owned blocks — the
-          // same contract as dd8's returned frame.
-          val fits = try comp.count() <= 2L * PairMemoMaxRows
-          catch {
-            case e: Throwable =>
-              rel.foreach(_.unpersist(blocking = false))
-              throw e
-          }
-          if (fits) {
-            val v = try (comp.schema, comp.collect().toSeq)
-            catch {
-              case e: Throwable =>
-                rel.foreach(_.unpersist(blocking = false))
-                throw e
-            }
-            finally graft.operators.Checkpoints.free(comp)
-            (s.createDataFrame(v._2.asJava, v._1), rel)
-          } else (comp, rel)
-        }
-    }
+          Right((Seq(v), 0L))
+        } else Left((Seq(QueryCache.heldComponents(comp, rel)), 0L, rel))
+      }
+    (frames.head, rel)
   }
 
-  /** Test hooks: drop the session memo so hygiene/fallback specs can
-    * force the real machinery regardless of suite execution order, and
-    * observe its size (the raw-measurement switch must store nothing).
-    */
-  private[graft] def clearMemo(): Unit = dedupMemo.clear()
-  private[graft] def memoSize: Int = dedupMemo.size
-
-  /** Queries served from [[dedupMemo]] after first computation — Bench
-    * re-times these raw (SparkEntry.memoizedQueries).
+  /** Queries served from the session memo ([[MemoKinds]]) after first
+    * computation — Bench re-times these raw (SparkEntry.memoizedQueries).
     */
   val memoizedNames: Set[String] = Set(
     "dd2_shingle_jaccard", "dd8_neardup_clusters", "dd9_edit_distance",

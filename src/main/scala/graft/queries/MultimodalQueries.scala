@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.multimodal.Multimodal
+import graft.operators.DriverTier
 
 /** Multimodal pipeline queries: the binary payload flows through the real
   * `mapPartitions` batch-decode plumbing ([[Multimodal.decodeMeta]]); the
@@ -104,20 +105,17 @@ object MultimodalQueries {
     // pass), 8×8-bit band buckets with the adaptive flood cap, pair join
     // only inside buckets — never item×item — exact Hamming re-rank on
     // the capped candidates.
-    "mm5_phash_neardup" -> ((s, dir) => {
-      import scala.jdk.CollectionConverters._
+    "mm5_phash_neardup" -> ((s, dir) =>
       phashArtifacts(s, dir) match {
-        case Right(a) =>
-          s.createDataFrame(a.top25._2.asJava, a.top25._1)
-            .withColumn("cap_bucket", lit(a.cap))
-        case Left((scored, cap, rel)) =>
+        case (Seq(top25, _), cap, Nil) =>
+          top25.withColumn("cap_bucket", lit(cap))
+        case (Seq(scored), cap, rel) =>
           QueryCache.resultThenRelease(
             scored.orderBy(col("hamming"), col("i"), col("j"))
               .limit(25)
               .withColumn("cap_bucket", lit(cap)),
             rel: _*)
-      }
-    }),
+      }),
 
     // Near-dup CLUSTERS over the perceptual-hash graph — mm5's pairs at
     // Hamming ≤ 12 (the very-near-copy band: re-encodes and rescales,
@@ -128,52 +126,26 @@ object MultimodalQueries {
     // frame is persisted and the candidate caches released before the
     // iteration fans out (dd8's cache discipline).
     "mm7_phash_clusters" -> ((s, dir) => {
-      import scala.jdk.CollectionConverters._
-      phashArtifacts(s, dir) match {
-        case Right(a) =>
-          s.createDataFrame(a.clusters._2.asJava, a.clusters._1)
-            .select(col("node").as("media_id"),
-              col("label").as("cluster_rep"))
-            .withColumn("cap_bucket", lit(a.cap))
-        case Left((scored, cap, rel)) =>
-          // the component map is ≤ 2·|edges| rows; when it fits the
-          // driver tier, hold a copy so the propagation's checkpoint
-          // blocks can be freed HERE instead of leaking for the session
-          // (clearCache cannot free LogicalRDD storage — Checkpoints);
-          // a genuinely over-bound map stays live, caller-owned blocks
-          // (dd8's contract). Same discipline as Dedup.memoClusters'
-          // fallback arm.
-          // componentsBounded: a ≤ PhashMemoMaxEdges graph — tens of
-          // pairs organically — folds as a driver union-find instead of
+      val (comp, cap, rel) = phashArtifacts(s, dir) match {
+        case (Seq(_, clusters), cap, Nil) => (clusters, cap, Nil)
+        case (Seq(scored), cap, rel) =>
+          // componentsBounded: a driver-tier graph — tens of pairs
+          // organically — folds as a driver union-find instead of
           // paying per-round job submissions; past the bound the Pregel
-          // loop runs unchanged (same labels — OperatorPropertySpec)
-          val comp0 = try graft.operators.ConnectedComponents
-            .componentsBounded(
+          // loop runs unchanged (same labels — OperatorPropertySpec).
+          // The map is then held on the driver when it fits (dd8's
+          // fallback, QueryCache.heldComponents)
+          val comp = QueryCache.releasingOnFailure(rel) {
+            graft.operators.ConnectedComponents.componentsBounded(
               scored.filter(col("hamming") <= 12).select("i", "j"),
-              "i", "j", maxRows = PhashMemoMaxEdges)
-          catch {
-            case e: Throwable =>
-              rel.foreach(_.unpersist(blocking = false))
-              throw e
+              "i", "j", maxRows = DriverTier.MaxRows)
           }
-          val comp = try {
-            if (comp0.count() <= 2L * PhashMemoMaxEdges) {
-              val v = try (comp0.schema, comp0.collect().toSeq)
-              finally graft.operators.Checkpoints.free(comp0)
-              s.createDataFrame(v._2.asJava, v._1)
-            } else comp0
-          } catch {
-            case e: Throwable =>
-              rel.foreach(_.unpersist(blocking = false))
-              throw e
-          }
-          QueryCache.resultThenRelease(
-            comp
-              .select(col("node").as("media_id"),
-                col("label").as("cluster_rep"))
-              .withColumn("cap_bucket", lit(cap)),
-            rel: _*)
+          (QueryCache.heldComponents(comp, rel), cap, rel)
       }
+      val out = comp
+        .select(col("node").as("media_id"), col("label").as("cluster_rep"))
+        .withColumn("cap_bucket", lit(cap))
+      if (rel.isEmpty) out else QueryCache.resultThenRelease(out, rel: _*)
     }),
 
     // CLIP-score filtering of image-caption pairs — the cross-modal
@@ -423,19 +395,6 @@ object MultimodalQueries {
     })
   )
 
-  /** Session-scoped memo for the pHash family's BOUNDED artifacts (the
-    * `Dedup.memoJaccardPairs` pattern — see its Scaladoc for the
-    * production materialize-once contract): one machinery pass per
-    * (corpus dir, shuffle layout) builds both gated frames — mm5's
-    * top-25 scored pairs (25 rows by construction) and mm7's cluster
-    * map (bounded by the very-near-copy structure). The UNLIMITED
-    * scored-pair frame itself is deliberately NOT memoized: at sf0.1 it
-    * already exceeds a sane driver copy, and at 100 TB it is the one
-    * frame here that stays cluster-sized. The edge-count guard declines
-    * the memo for corpora whose ≤ 12-Hamming edge list outgrows the
-    * driver tier; the memo key includes the shuffle layout so the
-    * partition-invariance sweep still runs the real machinery.
-    */
   /** mm8's VAD segmentation, factored over any [[Multimodal.AudioCodec]]
     * energy frame: a frame is "speech" iff Σa² ≥ thrPerUnit·n (exact
     * integer compare in the codec's native unit — unsigned bytes for the
@@ -472,77 +431,50 @@ object MultimodalQueries {
           .as("max_seg_frames"))
   }
 
-  private[graft] case class PhashArtifacts(
-    top25: (org.apache.spark.sql.types.StructType,
-      Seq[org.apache.spark.sql.Row]),
-    clusters: (org.apache.spark.sql.types.StructType,
-      Seq[org.apache.spark.sql.Row]),
-    cap: Long)
-
-  private val phashMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String), PhashArtifacts]
-  private val PhashMemoMaxEdges = 200000L
-
-  /** Memoized artifacts, or (on the over-bound fallback) the live
-    * persisted scored frame + cap + the frames the caller must release.
-    * `maxEdges` is injectable so the spec can force the fallback (the
-    * 100 TB path) on the driver fixture and pin it result-identical.
-    */
   /** Queries served from the pHash artifact memo — Bench re-times
     * these raw (SparkEntry.memoizedQueries).
     */
   val memoizedNames: Set[String] = Set("mm5_phash_neardup",
     "mm7_phash_clusters")
 
-  private[graft] def phashArtifacts(s: SparkSession, dir: String,
-      maxEdges: Long = PhashMemoMaxEdges)
-      : Either[(DataFrame, Long, Seq[DataFrame]), PhashArtifacts] = {
-    val key = (dir, s.conf.get("spark.sql.shuffle.partitions", ""))
-    // the raw-measurement switch forces the over-bound (live) contract
-    val effMaxEdges = if (QueryCache.memoDisabled(s)) -1L else maxEdges
-    (if (QueryCache.memoDisabled(s)) None else phashMemo.get(key)) match {
-      case Some(a) => Right(a)
-      case None =>
-        val (p, cap, caches) = phashScoredPairs(s, dir)
-        val scored = p.persist()
-        // failure path (QueryCache.resultThenRelease's discipline): any
-        // job error mid-build releases the corpus-sized caches first
-        try {
-          scored.count()
-          caches.foreach(_.unpersist(blocking = false))
-          val edges = scored.filter(col("hamming") <= 12).select("i", "j")
-          if (edges.count() > effMaxEdges)
-            Left((scored, cap, Seq(scored)))
-          else {
-            val top = scored.orderBy(col("hamming"), col("i"), col("j"))
-              .limit(25)
-            val t = (top.schema, top.collect().toSeq)
-            // edges just counted ≤ effMaxEdges — the driver union-find
-            // path always engages here (memo population)
-            val comp = graft.operators.ConnectedComponents
-              .componentsBounded(edges, "i", "j", maxRows = effMaxEdges)
-            val c = try (comp.schema, comp.collect().toSeq)
-            finally graft.operators.Checkpoints.free(comp)
-            scored.unpersist(blocking = false)
-            val a = PhashArtifacts(t, c, cap)
-            phashMemo.put(key, a)
-            Right(a)
-          }
-        } catch {
-          case e: Throwable =>
-            scored.unpersist(blocking = false)
-            caches.foreach(_.unpersist(blocking = false))
-            throw e
-        }
-    }
-  }
+  /** The pHash family's memo kind in [[QueryCache.memoized]]. */
+  private[graft] val PhashKind = "phash"
 
-  /** Test hooks: drop the session memo so hygiene/fallback specs can
-    * force the real machinery regardless of suite execution order, and
-    * observe its size (the raw-measurement switch must store nothing).
+  /** The pHash family's bounded artifacts, memoized ([[QueryCache.memoized]]
+    * holds the key, raw switch and fallback contract): one machinery pass
+    * per corpus builds both gated frames — mm5's top-25 scored pairs (25
+    * rows by construction) and mm7's cluster map (bounded by the
+    * very-near-copy structure), served as `(Seq(top25, clusters), cap,
+    * Nil)`. The UNLIMITED scored-pair frame itself is never held: when
+    * the ≤ 12-Hamming edge list outgrows `maxEdges` (or under the raw
+    * switch) the live persisted scored frame comes back as
+    * `(Seq(scored), cap, Seq(scored))`, the last element being what the
+    * caller must release. `maxEdges` is injectable so the spec can force
+    * that fallback on the driver fixture and pin it result-identical.
     */
-  private[graft] def clearMemo(): Unit = phashMemo.clear()
-  private[graft] def memoSize: Int = phashMemo.size
+  private[graft] def phashArtifacts(s: SparkSession, dir: String,
+      maxEdges: Long = DriverTier.MaxRows)
+      : (Seq[DataFrame], Long, Seq[DataFrame]) =
+    QueryCache.memoized(s, dir, PhashKind, maxEdges) { bound =>
+      val (p, cap, caches) = phashScoredPairs(s, dir)
+      val (scored, _) = QueryCache.persistCounted(p, caches)
+      QueryCache.releasingOnFailure(Seq(scored)) {
+        val edges = scored.filter(col("hamming") <= 12).select("i", "j")
+        if (edges.count() > bound) Left((Seq(scored), cap, Seq(scored)))
+        else {
+          val top = QueryCache.snapshot(
+            scored.orderBy(col("hamming"), col("i"), col("j")).limit(25))
+          // edges just counted ≤ bound — the driver union-find path
+          // always engages here (memo population)
+          val comp = graft.operators.ConnectedComponents
+            .componentsBounded(edges, "i", "j", maxRows = bound)
+          val c = try QueryCache.snapshot(comp)
+          finally graft.operators.Checkpoints.free(comp)
+          scored.unpersist(blocking = false)
+          Right((Seq(top, c), cap))
+        }
+      }
+    }
 
   /** mm5/mm7's shared candidate machinery: banded dHash buckets with the
     * adaptive flood cap, exact Hamming on surviving pairs — dd4's

@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Cache discipline for queries that persist large intermediates.
   *
@@ -25,17 +26,119 @@ import org.apache.spark.sql.DataFrame
   */
 private[graft] object QueryCache {
 
-  /** True when the session asks the QUERY-RESULT memos (dd pair list /
-    * cluster map, pHash artifacts, ANN tier shortlists) to stand down
-    * so every run executes its raw pipeline end-to-end — the honest
-    * per-query measurement switch (Bench maps SPARK_GRAFT_NO_MEMO=1
-    * onto this conf). TRAINED-ARTIFACT memos (k-means centroids, BPE
-    * merge tables) are deliberately NOT covered: those memoize an
-    * input a production pipeline loads from storage, not the work the
-    * gated query is measured on.
+  /** A driver copy of a bounded result: its schema and rows, rebuilt
+    * into a local frame with `createDataFrame` on every serve.
     */
-  def memoDisabled(s: org.apache.spark.sql.SparkSession): Boolean =
-    s.conf.getOption("spark.graft.memo.disabled").contains("true")
+  private[graft] type Snapshot = (StructType, Seq[Row])
+
+  /** What a [[memoized]] build hands back: `Right((snapshots, cap))` to
+    * store and serve, or `Left((live, cap, release))` past the bound —
+    * the live frames plus the frames the CALLER must release after
+    * materializing its result.
+    */
+  private[graft] type Built =
+    Either[(Seq[DataFrame], Long, Seq[DataFrame]), (Seq[Snapshot], Long)]
+
+  /** The session query-result memo (dd pair lists and component map, the
+    * pHash artifacts, the ANN tier shortlists). A production pipeline
+    * materializes these bounded results once and feeds every downstream
+    * stage from the materialization; the memo emulates that
+    * compute-once contract within one JVM, so e.g. dd2/dd12's shingle
+    * machinery, dd8/dd14's component fold, mm5/mm7's pHash pass and
+    * s16's tiers each run once per corpus.
+    *
+    * Key: (corpus dir, kind, `spark.sql.shuffle.partitions`) — the
+    * layout is part of the key so the partition-invariance sweep still
+    * runs the real machinery under its changed layout. Value: the
+    * driver snapshots of the result plus the cap the build derived.
+    *
+    * Raw switch: `spark.graft.memo.disabled=true` (Bench and Verify map
+    * SPARK_GRAFT_NO_MEMO=1 onto it) reads nothing and stores nothing,
+    * and the build sees a bound of −1, so every run executes its raw
+    * pipeline end to end. Trained-artifact memos (k-means centroids,
+    * BPE merges) are deliberately not here: they stand in for an input
+    * a production pipeline loads from storage, not for the work the
+    * query is measured on.
+    *
+    * Fallback: a result is held on the driver only while it fits the
+    * bound the caller passes (normally [[graft.operators.DriverTier]]);
+    * past it the build hands back the live distributed frames and the
+    * frames the caller must release, and nothing is stored.
+    */
+  private val memo = scala.collection.concurrent.TrieMap
+    .empty[(String, String, String), (Seq[Snapshot], Long)]
+
+  /** Serve `kind` for `dir` from the memo, or run `build(bound)` and
+    * store what it snapshots. Returns (frames, cap, frames the caller
+    * must release) — local frames and no releases on a hit or a store,
+    * the build's live frames past the bound or under the raw switch.
+    */
+  def memoized(s: SparkSession, dir: String, kind: String, maxRows: Long)(
+      build: Long => Built): (Seq[DataFrame], Long, Seq[DataFrame]) = {
+    val raw = s.conf.getOption("spark.graft.memo.disabled").contains("true")
+    val key = (dir, kind, s.conf.get("spark.sql.shuffle.partitions", ""))
+    val hit = if (raw) None else memo.get(key)
+    hit.map(Right(_)).getOrElse(build(if (raw) -1L else maxRows)) match {
+      case Left(live) => live
+      case Right(e @ (snaps, cap)) =>
+        if (hit.isEmpty && !raw) memo.put(key, e)
+        (snaps.map(local(s, _)), cap, Nil)
+    }
+  }
+
+  /** Test and tool hooks: drop, or count, the memo entries whose kind
+    * `kinds` accepts (all of them by default) — so a caller clears only
+    * the family it needs cold and the other families stay warm.
+    */
+  def clearMemo(kinds: String => Boolean = _ => true): Unit =
+    memo.keys.filter(k => kinds(k._2)).foreach(memo.remove)
+  def memoSize(kinds: String => Boolean = _ => true): Int =
+    memo.keys.count(k => kinds(k._2))
+
+  def snapshot(df: DataFrame): Snapshot = (df.schema, df.collect().toSeq)
+
+  def local(s: SparkSession, snap: Snapshot): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    s.createDataFrame(snap._2.asJava, snap._1)
+  }
+
+  /** Run `body`; if it throws, release `frames` before rethrowing, so a
+    * failed query does not strand corpus-sized caches for the session.
+    */
+  def releasingOnFailure[A](frames: Seq[DataFrame])(body: => A): A =
+    try body
+    catch {
+      case e: Throwable =>
+        frames.foreach(_.unpersist(blocking = false))
+        throw e
+    }
+
+  /** Persist `df` and count it (the count fills the cache), then release
+    * the `caches` it was computed from — on the failure path too.
+    */
+  def persistCounted(df: DataFrame, caches: Seq[DataFrame]): (DataFrame, Long) = {
+    val out = df.persist()
+    val n = releasingOnFailure(out +: caches)(out.count())
+    caches.foreach(_.unpersist(blocking = false))
+    (out, n)
+  }
+
+  /** A (node, label) component map, held on the driver when its count
+    * (cheap — `comp` is checkpointed) is within
+    * 2·[[graft.operators.DriverTier.MaxRows]] (a map has at most two rows
+    * per edge), its checkpoint blocks freed HERE instead of leaking for
+    * the session (clearCache cannot free LogicalRDD storage — see
+    * Checkpoints). A larger map stays live, its blocks owned by the
+    * caller. `release` is freed if any of this fails.
+    */
+  def heldComponents(comp: DataFrame, release: Seq[DataFrame]): DataFrame =
+    releasingOnFailure(release) {
+      if (comp.count() <= 2L * graft.operators.DriverTier.MaxRows) {
+        val v = try snapshot(comp)
+        finally graft.operators.Checkpoints.free(comp)
+        local(comp.sparkSession, v)
+      } else comp
+    }
 
   /** Open within-INVOCATION deferred-release scope, or null when closed.
     * See [[withDeferredRelease]]. Thread-local: query functions build and
@@ -92,13 +195,7 @@ private[graft] object QueryCache {
     // release BOTH the half-built result cache and the intermediates before
     // rethrowing — otherwise a failed query leaks exactly the corpus-sized
     // caches this class exists to free
-    try out.count()
-    catch {
-      case e: Throwable =>
-        out.unpersist(blocking = false)
-        intermediates.foreach(_.unpersist(blocking = false))
-        throw e
-    }
+    releasingOnFailure(out +: intermediates)(out.count())
     val scope = deferred.get
     if (scope != null) scope ++= intermediates
     else intermediates.foreach(_.unpersist(blocking = false))
@@ -113,10 +210,6 @@ private[graft] object QueryCache {
     * Only for results bounded by construction (group-by over a small
     * categorical domain); never corpus-sized frames.
     */
-  def materializeLocal(result: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    import scala.jdk.CollectionConverters._
-    result.sparkSession
-      .createDataFrame(result.collect().toSeq.asJava, result.schema)
-  }
+  def materializeLocal(result: DataFrame): DataFrame =
+    local(result.sparkSession, snapshot(result))
 }

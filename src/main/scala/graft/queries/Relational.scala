@@ -2145,7 +2145,7 @@ object Relational {
       // loop unchanged.
       graft.operators.PageRank.run(edges, damping = 0.85, iters = 10,
           requireFullDegree = true, checkpointEvery = 2,
-          driverMaxEdges = graft.operators.PageRank.DriverTierMaxEdges)
+          driverMaxEdges = graft.operators.DriverTier.MaxRows)
         .select(col("node"), col("rank"))
     }),
 
@@ -2242,7 +2242,7 @@ object Relational {
         // 3.10 → 1.73 s (the residue is the shared basket front end,
         // whose respread/spread levers were A/B'd and rejected above).
         val driverEdges: Option[Array[(Long, Long)]] =
-          if (nEdges <= graft.operators.Triangles.DriverTierMaxEdges &&
+          if (nEdges <= graft.operators.DriverTier.MaxRows &&
               e.schema("p1").dataType ==
                 org.apache.spark.sql.types.LongType &&
               e.schema("p2").dataType ==

@@ -2084,7 +2084,7 @@ object Text {
   private[graft] val BpeArtifact = "t28_bpe_merges"
   private[graft] val BpeParams = Map("rounds" -> BpeRounds.toString)
 
-  /** Test hook for the artifact specs (Dedup.clearMemo's sibling). */
+  /** Test hook for the artifact specs (QueryCache.clearMemo's sibling). */
   private[graft] def clearBpeMemo(): Unit = bpeMemo.clear()
 
   /** Queries whose cost the [[bpeMemo]] trained-artifact memo absorbs

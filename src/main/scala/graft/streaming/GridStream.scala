@@ -48,10 +48,13 @@ object GridStream {
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .option("recursiveFileLookup", "true")
       .parquet(qualified)
+      // the stamp is UTC (GridCatalog.parseTs): parse it with an explicit
+      // zero offset, not in the session time zone
       .withColumn("time",
         to_timestamp(
-          regexp_extract(input_file_name(), GridCatalog.TsRegex, 1),
-          "yyyy-MM-dd'T'HH:mm:ss"))
+          concat(regexp_extract(input_file_name(), GridCatalog.TsRegex, 1),
+            lit("Z")),
+          GridCatalog.TsPattern + "X"))
   }
 
   /** Watermarked tumbling-window statistics per variable column — the

@@ -72,7 +72,7 @@ object Profile {
       val fn = graft.SparkEntry.queries(n)
       // warm-up run: JIT/codegen, then profile the steady-state run
       (1 to runs).foreach { r =>
-        graft.queries.Dedup.clearMemo()
+        graft.queries.QueryCache.clearMemo(graft.queries.Dedup.MemoKinds)
         graft.queries.Text.clearBpeMemo()
         spark.catalog.clearCache()
         listener.reset()

@@ -368,7 +368,7 @@ object ScaleRehearsal {
     val out = ensureOrganic(spark, mult)
     val docs0 = spark.read.parquet(s"$out/documents.parquet")
       .select("doc_id", "lang", "text")
-    Dedup.clearMemo()
+    graft.queries.QueryCache.clearMemo(graft.queries.Dedup.MemoKinds)
     spark.catalog.clearCache()
     // per-stage-window shuffle bytes (r15: the dd2/dd12 key-narrowing
     // A/B needs byte evidence, not just wall) — summed over the stages
@@ -456,7 +456,7 @@ object ScaleRehearsal {
     import graft.functions.HashFunctions
     import graft.operators.BucketCap
     val out = ensureOrganic(spark, mult)
-    Dedup.clearMemo()
+    graft.queries.QueryCache.clearMemo(graft.queries.Dedup.MemoKinds)
     spark.catalog.clearCache()
     def timed[A](body: => A): (A, Double, Long) = {
       val t0 = System.nanoTime()
@@ -595,7 +595,7 @@ object ScaleRehearsal {
     val out = if (!dedupFirst) base else ensureDedupFirst(spark, base)
     val nVecs = spark.read.parquet(s"$out/embeddings.parquet").count()
     def topIds(name: String): (Seq[Long], Double) = {
-      graft.queries.Dedup.clearMemo()
+      graft.queries.QueryCache.clearMemo(graft.queries.Dedup.MemoKinds)
       Similarity.clearTrainedCaches()
       spark.catalog.clearCache()
       val t0 = System.nanoTime()
@@ -631,7 +631,7 @@ object ScaleRehearsal {
         .map(_._2.toSet).getOrElse(Set.empty[Long])
       val missed18 = (exactSet -- s18ids).toSeq.sorted
       val s18probe = {
-        graft.queries.Dedup.clearMemo()
+        graft.queries.QueryCache.clearMemo(graft.queries.Dedup.MemoKinds)
         Similarity.clearTrainedCaches()
         spark.catalog.clearCache()
         // counterfactual: the PRE-adoption family width (the gated s18
@@ -710,7 +710,7 @@ object ScaleRehearsal {
     // brute-forced on the constructed-flood spec fixture
     // (DedupSimilaritySpec); organic records emissions only.
     val s3row = {
-      graft.queries.Dedup.clearMemo()
+      graft.queries.QueryCache.clearMemo(graft.queries.Dedup.MemoKinds)
       Similarity.clearTrainedCaches()
       spark.catalog.clearCache()
       val t0 = System.nanoTime()
@@ -806,7 +806,7 @@ object ScaleRehearsal {
       "organic_dedup" -> ensureDedupFirst(spark, base))
     val tiers = Seq("s4_ivf_knn", "s9_ivf_trained", "s17_ivfpq_knn")
     def clearAll(): Unit = {
-      graft.queries.Dedup.clearMemo()
+      graft.queries.QueryCache.clearMemo(graft.queries.Dedup.MemoKinds)
       Similarity.clearTrainedCaches()
       spark.catalog.clearCache()
     }
@@ -857,7 +857,7 @@ object ScaleRehearsal {
     val base = ensureOrganic(spark, mult)
     val out = s"target/rehearsal/organic_x${mult}_ddfirst"
     def freshAll(): Unit = {
-      graft.queries.Dedup.clearMemo()
+      graft.queries.QueryCache.clearMemo(graft.queries.Dedup.MemoKinds)
       Similarity.clearTrainedCaches()
       Serving.clearIndexCache()
       spark.catalog.clearCache()
@@ -1070,8 +1070,7 @@ object ScaleRehearsal {
       // memo DECISION machinery stays live — dd2/dd8's driver-tier bound
       // check must run and decline organically, which is the point
       val times = (1 to runs).map { _ =>
-        graft.queries.Dedup.clearMemo()
-        graft.queries.MultimodalQueries.clearMemo()
+        graft.queries.QueryCache.clearMemo()
         graft.queries.Similarity.clearTrainedCaches()
         spark.catalog.clearCache()
         val t0 = System.nanoTime()
@@ -1100,7 +1099,8 @@ object ScaleRehearsal {
       // over-bound fallback: dd2/dd8's driver-tier memo must DECLINE to
       // store a pair list this large — memoSize stays 0 when the data
       // (not a spec injection) forces the distributed path
-      val memoEntries = graft.queries.Dedup.memoSize
+      val memoEntries = graft.queries.QueryCache.memoSize(
+        graft.queries.Dedup.MemoKinds)
       s""""$name":{"min_sec":${fmt(times.min)},"rows":$n,""" +
         s""""bad_join":$badJoin,"dedup_memo_entries":$memoEntries}"""
     }

@@ -241,7 +241,7 @@ object StreamRehearsal {
       // batch reference FIRST: dd3's gated pipeline over the same
       // corpus — its emitted cap is the knob the screen must match for
       // the superset contract to be meaningful (StreamingSpec's setup)
-      graft.queries.Dedup.clearMemo()
+      graft.queries.QueryCache.clearMemo(graft.queries.Dedup.MemoKinds)
       val dd3 = graft.SparkEntry.queries("dd3_minhash_lsh")(spark, src)
       val batchPairsPath = s"$out/batch_pairs"
       dd3.write.mode("overwrite").parquet(batchPairsPath)

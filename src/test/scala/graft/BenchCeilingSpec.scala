@@ -34,7 +34,7 @@ class BenchCeilingSpec extends SparkSuite {
     df.write.format("noop").mode("overwrite").save()
 
   private def freshState(): Unit = {
-    graft.queries.Dedup.clearMemo()
+    graft.queries.QueryCache.clearMemo(graft.queries.Dedup.MemoKinds)
     graft.queries.Text.clearBpeMemo()
     spark.catalog.clearCache()
   }

@@ -109,8 +109,8 @@ class CacheHygieneSpec extends SparkSuite {
       // hit (a LocalRelation replay persists nothing) — clear them so
       // this test exercises the build path's cache discipline no matter
       // which suite ran first in the shared JVM
-      graft.queries.Dedup.clearMemo()
-      graft.queries.MultimodalQueries.clearMemo()
+      graft.queries.QueryCache.clearMemo(graft.queries.Dedup.MemoKinds +
+        graft.queries.MultimodalQueries.PhashKind)
       // delta vs the session baseline: earlier suites may hold their own
       // persistent RDDs (this shared-JVM session runs suites sequentially)
       val before = spark.sparkContext.getPersistentRDDs.keySet

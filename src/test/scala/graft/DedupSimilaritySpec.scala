@@ -565,23 +565,33 @@ class DedupSimilaritySpec extends SparkSuite {
   }
 
   test("spark.graft.memo.disabled runs raw pipelines and stores nothing") {
-    graft.queries.Dedup.clearMemo()
-    spark.conf.set("spark.graft.memo.disabled", "true")
-    try {
-      // dd2 through the public entry: must produce the gated frame from
-      // the LIVE machinery (no memo entry before, none after)
-      val live = SparkEntry.queries("dd2_shingle_jaccard")(spark, sf)
-        .collect().map(_.toString).sorted.toSeq
-      assert(graft.queries.Dedup.memoSize == 0,
-        "raw-measurement switch stored a memo entry")
-      spark.conf.unset("spark.graft.memo.disabled")
-      graft.queries.Dedup.clearMemo()
-      val memo = SparkEntry.queries("dd2_shingle_jaccard")(spark, sf)
-        .collect().map(_.toString).sorted.toSeq
-      assert(graft.queries.Dedup.memoSize > 0,
-        "memo path did not store — vacuous comparison")
-      assert(live == memo, "raw and memoized dd2 frames diverge")
-    } finally spark.conf.unset("spark.graft.memo.disabled")
+    import graft.queries.{Dedup, MultimodalQueries, QueryCache}
+    // one query per memo family (dd pair lists, pHash artifacts, ANN
+    // tiers) with the memo kinds it reads; only those kinds are cleared,
+    // so the other families stay warm for later suites in the shared JVM
+    for ((name, kinds) <- Seq(
+        "dd2_shingle_jaccard" -> Dedup.MemoKinds,
+        "dd12_containment" -> Dedup.MemoKinds,
+        "mm5_phash_neardup" -> Set(MultimodalQueries.PhashKind),
+        "s1_knn_brute" -> Set("s1_knn_brute"))) {
+      QueryCache.clearMemo(kinds)
+      spark.conf.set("spark.graft.memo.disabled", "true")
+      try {
+        // through the public entry: must produce the gated frame from
+        // the LIVE machinery (no memo entry before, none after)
+        val live = SparkEntry.queries(name)(spark, sf)
+          .collect().map(_.toString).sorted.toSeq
+        assert(QueryCache.memoSize(kinds) == 0,
+          s"raw-measurement switch stored a memo entry for $name")
+        spark.conf.unset("spark.graft.memo.disabled")
+        QueryCache.clearMemo(kinds)
+        val memo = SparkEntry.queries(name)(spark, sf)
+          .collect().map(_.toString).sorted.toSeq
+        assert(QueryCache.memoSize(kinds) > 0,
+          s"memo path did not store for $name — vacuous comparison")
+        assert(live == memo, s"raw and memoized $name frames diverge")
+      } finally spark.conf.unset("spark.graft.memo.disabled")
+    }
   }
 
   test("pHash-memo over-bound fallback is result-identical to the artifacts") {
@@ -590,20 +600,20 @@ class DedupSimilaritySpec extends SparkSuite {
     try {
       val top25 = graft.queries.MultimodalQueries
         .phashArtifacts(spark, sf, maxEdges = -1L) match {
-        case Left((scored, cap, rel)) =>
+        case (Seq(scored), cap, rel) if rel.nonEmpty =>
           val t = scored.orderBy(col("hamming"), col("i"), col("j"))
             .limit(25).collect()
             .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
           rel.foreach(_.unpersist(blocking = false))
           (t, cap)
-        case Right(_) => fail("maxEdges = -1 must take the fallback")
+        case _ => fail("maxEdges = -1 must take the fallback")
       }
       val memo = graft.queries.MultimodalQueries
         .phashArtifacts(spark, sf) match {
-        case Right(a) =>
-          (a.top25._2.map(r =>
-            (r.getLong(0), r.getLong(1), r.getInt(2))).toSet, a.cap)
-        case Left(_) => fail("default bound should memoize on this fixture")
+        case (Seq(t, _), cap, Nil) =>
+          (t.collect().map(r =>
+            (r.getLong(0), r.getLong(1), r.getInt(2))).toSet, cap)
+        case _ => fail("default bound should memoize on this fixture")
       }
       assert(top25 == memo, "fallback top-25 diverges from the artifacts")
     } finally spark.conf.set("spark.sql.shuffle.partitions", "4")
@@ -1028,7 +1038,7 @@ class DedupSimilaritySpec extends SparkSuite {
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
 
   private def freshCaches(): Unit = {
-    graft.queries.Dedup.clearMemo()
+    graft.queries.QueryCache.clearMemo(graft.queries.Dedup.MemoKinds)
     graft.queries.Similarity.clearTrainedCaches()
     spark.catalog.clearCache()
   }
@@ -1145,7 +1155,7 @@ class DedupSimilaritySpec extends SparkSuite {
     "two-long groupBy (r12 ask #7 spill knob)") {
     import graft.queries.Dedup
     def run(): Set[(Long, Long, Double)] = {
-      Dedup.clearMemo()
+      graft.queries.QueryCache.clearMemo(Dedup.MemoKinds)
       val (p, _, caches) = Dedup.shingleJaccardPairsWithCaches(spark, sf)
       val out = p.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet

@@ -144,6 +144,23 @@ class GridEngineSpec extends SparkSuite {
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
   }
 
+  test("cadence stream time is the files' UTC instants under a non-UTC session zone") {
+    val ny = spark.newSession()
+    ny.conf.set("spark.sql.session.timeZone", "America/New_York")
+    val files = new GridReader(ny, dir).files()
+    val stream = graft.streaming.GridStream.cadenceStream(ny, dir,
+      ny.read.parquet(files.head.path).schema, maxFilesPerTrigger = 13)
+    val q = stream.agg(min(col("time")).as("t"))
+      .writeStream.format("memory").queryName("ny_cadence_time")
+      .outputMode("complete")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    q.awaitTermination(120000)
+    val first = ny.table("ny_cadence_time").head().getTimestamp(0)
+    assert(first.toInstant == files.head.ts,
+      s"${first.toInstant.getEpochSecond} != ${files.head.ts.getEpochSecond}")
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+  }
+
   test("CSV grid source: same window fetch through format=csv") {
     import org.apache.spark.sql.SaveMode
     // convert three timesteps of the parquet fixture to CSV files

@@ -83,7 +83,7 @@ class PageRankSpec extends SparkSuite {
     val sDist = PageRank.run(sdf, iters = 10, requireFullDegree = true)
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     val sDrv = PageRank.run(sdf, iters = 10, requireFullDegree = true,
-        driverMaxEdges = PageRank.DriverTierMaxEdges)
+        driverMaxEdges = graft.operators.DriverTier.MaxRows)
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(sDrv.keySet == sDist.keySet)
     sDist.foreach { case (v, r) => assert(math.abs(sDrv(v) - r) < 1e-12) }

@@ -359,7 +359,7 @@ class ServingSpec extends SparkSuite {
     val idxPath = java.nio.file.Files
       .createTempDirectory("graft-dedupserve-idx").toString
     def freshAll(): Unit = {
-      graft.queries.Dedup.clearMemo()
+      graft.queries.QueryCache.clearMemo(graft.queries.Dedup.MemoKinds)
       Similarity.clearTrainedCaches()
       Serving.clearIndexCache()
       spark.catalog.clearCache()
