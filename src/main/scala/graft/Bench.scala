@@ -46,32 +46,14 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
       .max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // let AQE re-coalesce reads of CACHED plans too (off by default
-      // for plan-reuse compatibility): the persisted intermediates here
-      // are often tiny (edge lists, shortlists), and without this every
-      // consumer of a cached frame inherits its full shuffle-partition
-      // fan-out — measured 8.8s -> 4.9s on q60 and 3.2s -> 2.2s on q57
-      // at sf0.1, with no regression on scan-heavy rows
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.cpus)
     spark.sparkContext.setLogLevel("WARN")
 
-    // SPARK_GRAFT_NO_MEMO=1: bypass the session query-result memos so
-    // every run measures its raw pipeline end-to-end (the honest
-    // per-query measurement switch — see QueryCache.memoized)
-    if (sys.env.get("SPARK_GRAFT_NO_MEMO").contains("1"))
-      spark.conf.set("spark.graft.memo.disabled", "true")
+    // SPARK_GRAFT_NO_MEMO=1: every run measures its raw pipeline
+    // end-to-end (the honest per-query measurement switch)
+    val alreadyRaw = GraftSession.applyNoMemo(spark)
 
     // JVM/codegen warm-up on the smallest sf so first-query JIT cost does
     // not land on an arbitrary alphabetically-first query.
@@ -82,19 +64,9 @@ object Bench {
     val calPre = calibrate(spark, runs)
 
     // optional comma-separated filter for timing one query in isolation
-    // (local iteration only — the driver always runs the full suite).
-    // SPARK_GRAFT_ONLY is the canonical name, shared with Verify;
-    // SPARK_GRAFT_BENCH_ONLY stays as a back-compat alias. Like Verify,
-    // the filter only engages with the explicit SPARK_GRAFT_DEV=1 opt-in,
-    // so a leaked env var cannot shrink a driver bench run.
-    val devMode = sys.env.get("SPARK_GRAFT_DEV").contains("1")
-    val rawOnly = sys.env.get("SPARK_GRAFT_ONLY")
-      .orElse(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
-    if (rawOnly.isDefined && !devMode)
-      System.err.println("[bench] SPARK_GRAFT_ONLY present but IGNORED: " +
-        "set SPARK_GRAFT_DEV=1 to filter (full suite runs)")
-    val only = rawOnly.filter(_ => devMode)
-      .map(_.split(",").map(_.trim).toSet)
+    // (local iteration only — the driver always runs the full suite):
+    // SPARK_GRAFT_ONLY with SPARK_GRAFT_DEV=1, as for Verify
+    val only = GraftSession.queryFilter("bench")
     var nFailed = 0
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -123,6 +95,9 @@ object Bench {
       val okTimes = times.collect { case (true, t) => t }
       name -> (if (okTimes.nonEmpty) Some(okTimes.min) else None)
     }
+    // calibration row #2: box state between the memo-on and raw passes
+    val calMid = calibrate(spark, runs)
+
     // Paired RAW rows for the memoized queries (VERDICT r8 ask #2):
     // their memo-on rows above time a LocalRelation replay after the
     // first run, so a second pass re-times exactly those queries under
@@ -131,10 +106,6 @@ object Bench {
     // stays visible as the memo/raw pair. Skipped when the whole bench
     // is already raw (SPARK_GRAFT_NO_MEMO=1 — the pair would be two
     // identical columns).
-    val alreadyRaw = sys.env.get("SPARK_GRAFT_NO_MEMO").contains("1")
-
-    // calibration row #2: box state between the memo-on and raw passes
-    val calMid = calibrate(spark, runs)
     var nRawFailed = 0
     val rawResults: Seq[(String, Option[Double])] =
       if (alreadyRaw) Seq.empty

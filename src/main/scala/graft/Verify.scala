@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, StandardCopyOption}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -28,37 +27,17 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
-    // the env-var spelling of the filter additionally requires
-    // SPARK_GRAFT_DEV=1: a stray SPARK_GRAFT_ONLY leaking into a
-    // driver/gate invocation (which passes exactly 2 args) must not be
-    // able to shrink the verified suite on its own — the explicit arg
-    // remains the dev fast path, the env pair is for wrapper scripts
-    val devMode = sys.env.get("SPARK_GRAFT_DEV").contains("1")
-    if (args.length <= 2 && !devMode && sys.env.contains("SPARK_GRAFT_ONLY"))
-      System.err.println("[verify] SPARK_GRAFT_ONLY present but IGNORED: " +
-        "set SPARK_GRAFT_DEV=1 to filter (full suite runs)")
-    val filter: Option[Set[String]] =
-      (if (args.length > 2) Some(args(2))
-       else sys.env.get("SPARK_GRAFT_ONLY").filter(_ => devMode))
-        .map(_.split(",").map(_.trim).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // match Bench: AQE may re-coalesce cached-plan reads (see the
-      // Bench builder note)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
+    // the explicit arg is the dev fast path; the env-var spelling
+    // additionally requires SPARK_GRAFT_DEV=1 (see GraftSession), so a
+    // stray SPARK_GRAFT_ONLY cannot shrink a 2-arg gate run on its own
+    val filter = GraftSession.queryFilter("verify", args.lift(2))
+    val spark = GraftSession.local(GraftSession.cpus)
     spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_NO_MEMO=1 (Bench's raw-measurement switch, honored
     // here too): every memoized query dumps its RAW pipeline's frame —
     // running the full oracle gate under this proves the raw paths
     // hash-green end-to-end, not just the replay paths
-    if (sys.env.get("SPARK_GRAFT_NO_MEMO").contains("1"))
-      spark.conf.set("spark.graft.memo.disabled", "true")
+    GraftSession.applyNoMemo(spark)
     new java.io.File(outDir).mkdirs()
     val outAbs = new java.io.File(outDir).getAbsolutePath
     // a filtered run is a DEV run: make it unmistakable in both the log

@@ -857,27 +857,11 @@ object FuzzHarness {
     val outDir = args(1)
     val seed = if (args.length > 2) args(2).toLong else 42L
     val n = if (args.length > 3) args(3).toInt else 500
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     // SPARK_GRAFT_MASTER=local-cluster[n,c,mem] re-runs the same cases
     // with executors in separate JVMs — partitioning/serialization
-    // sensitivity sweep (ScaleRehearsal's launch facts apply)
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    if (master.startsWith("local-cluster")) {
-      val classes = Seq("target/scala-2.13/classes")
-        .map(p => new java.io.File(p).getAbsolutePath)
-        .filter(p => new java.io.File(p).isDirectory)
-        .mkString(java.io.File.pathSeparator)
-      builder.config("spark.executor.extraClassPath", classes)
-      val workerMb = master.split("[\\[\\],]")(3).trim
-      builder.config("spark.executor.memory",
-        sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", s"${workerMb}m"))
-    }
-    val spark = builder.getOrCreate()
+    // sensitivity sweep
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus,
+      graft.GraftSession.masterFromEnv)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val all = Fuzz.cases(seed, n)

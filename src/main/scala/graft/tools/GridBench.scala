@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.api.GridFields
@@ -15,14 +14,7 @@ import graft.source.{GridFixtures, GridReader}
 object GridBench {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toInt else 2000000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -1,33 +1,20 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Dev diagnostic: print formatted physical plans for selected queries
-  * (plan-quality review — pushdown, broadcast choice, codegen spans).
-  * `runMain graft.tools.Plans [queryName …]`
+  * (plan-quality review — pushdown, broadcast choice, codegen spans),
+  * on Bench's session shape.
+  * `runMain graft.tools.Plans [queryName …]`; `SPARK_GRAFT_EXTRA_CONF`
+  * sets session confs, e.g. `spark.graft.memo.disabled=true` to see
+  * through the artifact memos to the real computation's plan.
   */
 object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.cpus,
+      extra = GraftSession.extraConfFromEnv)
     spark.sparkContext.setLogLevel("ERROR")
-    // session-conf overrides, e.g. spark.graft.memo.disabled=true to see
-    // through the artifact memos to the real computation's plan
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(",")
-      .filter(_.nonEmpty).foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => spark.conf.set(k, v)
-          case _ => sys.error(
-            s"SPARK_GRAFT_EXTRA_CONF entry '$kv' is not key=value " +
-              "(note: values containing commas cannot be expressed)")
-        }
-      })
     val names = if (args.nonEmpty) args.toSeq else graft.SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>
       println(s"\n========== $n ==========")

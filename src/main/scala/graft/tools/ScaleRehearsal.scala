@@ -43,40 +43,6 @@ object ScaleRehearsal {
     "dd2_shingle_jaccard", "dd3_minhash_lsh", "dd8_neardup_clusters",
     "s3_ann_srp", "s17_ivfpq_knn", "p8_full_pipeline")
 
-  /** Max records read by any single task (shuffle or input) across the
-    * jobs run while registered — the "did one task get the whole
-    * bucket" probe.
-    */
-  private final class MaxTaskRows
-      extends org.apache.spark.scheduler.SparkListener {
-    val max = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onTaskEnd(
-        e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) {
-        val r = math.max(m.shuffleReadMetrics.recordsRead,
-          m.inputMetrics.recordsRead)
-        max.getAndAccumulate(r, math.max(_, _))
-      }
-    }
-  }
-
-  private def withMaxTaskRows[A](spark: SparkSession)(body: => A): (A, Long) = {
-    val l = new MaxTaskRows
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val a = body
-      // listener events are posted asynchronously (the bus drain API is
-      // private[spark]); poll until the max stabilizes
-      var prev = -1L
-      var i = 0
-      while (i < 20 && l.max.get() != prev) {
-        prev = l.max.get(); Thread.sleep(100); i += 1
-      }
-      (a, l.max.get())
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
   private def runDegenerate(spark: SparkSession, mult: Int): Unit = {
     import org.apache.spark.sql.functions._
     // AQE's partition COALESCING is disabled for the degenerate probes:
@@ -102,13 +68,12 @@ object ScaleRehearsal {
       val flood = spark.range(0, nVecs)
         .select(col("id").as("vec_id"),
           explode(expr("sequence(0, 7)")).as("tb"))
-      val t0 = System.nanoTime()
-      val (n, maxRows) = withMaxTaskRows(spark) {
+      val (n, work) = SparkWork.measure(spark) {
         val (pairs, cache) = graft.operators.FloodPairs
           .rankAdjacent(flood, Seq("tb"), "vec_id", 8)
         try pairs.count() finally cache.unpersist(blocking = false)
       }
-      (n, maxRows, (System.nanoTime() - t0) / 1e9)
+      (n, work.maxTaskRecords, work.seconds)
     }
     val (n32, max32, t32) = probe(32)
     val (n64, max64, t64) = probe(64)
@@ -152,17 +117,17 @@ object ScaleRehearsal {
 
     // (b') the SemDeDup monster cell: ONE cell holding the whole corpus;
     // linear pairing must still collapse it to a single survivor
-    val t2 = System.nanoTime()
     val assigned = spark.read.parquet(embOut)
       .select(col("vec_id"), lit(0L).as("cent_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE) / 8.0)").as("unit"))
-    val (drops, maxCell) = withMaxTaskRows(spark) {
+    val (drops, ddWork) = SparkWork.measure(spark) {
       val (dropsDf, caches) =
         graft.queries.Dedup.semDedupDrops(assigned, cap = 1000L)
       try dropsDf.count()
       finally caches.foreach(_.unpersist(blocking = false))
     }
-    val ddsec = (System.nanoTime() - t2) / 1e9
+    val maxCell = ddWork.maxTaskRecords
+    val ddsec = ddWork.seconds
     require(drops == nVecs - 1,
       s"monster cell kept ${nVecs - drops} survivors (want 1)")
     require(maxCell < nVecs,
@@ -371,29 +336,11 @@ object ScaleRehearsal {
     graft.queries.QueryCache.clearMemo(graft.queries.Dedup.MemoKinds)
     spark.catalog.clearCache()
     // per-stage-window shuffle bytes (r15: the dd2/dd12 key-narrowing
-    // A/B needs byte evidence, not just wall) — summed over the stages
-    // that complete while the timed body runs
-    final class StageBytes extends org.apache.spark.scheduler.SparkListener {
-      val written = new java.util.concurrent.atomic.AtomicLong(0L)
-      override def onStageCompleted(
-          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val m = e.stageInfo.taskMetrics
-        if (m != null) written.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-    def timed[A](body: => A): (A, Double, Long, Long) = {
-      val bytes = new StageBytes
-      spark.sparkContext.addSparkListener(bytes)
-      try {
-        val t0 = System.nanoTime()
-        val (a, maxRows) = withMaxTaskRows(spark)(body)
-        (a, (System.nanoTime() - t0) / 1e9, maxRows, bytes.written.get())
-      } finally spark.sparkContext.removeSparkListener(bytes)
-    }
+    // A/B needs byte evidence, not just wall)
     // A: kernel + dfreq + cap (shingleCandidatesFromDocs derives the
     // cap eagerly, which materializes both persisted frames)
-    val ((candBounds, docs, cap, caches), tA, maxA, byA) =
-      timed(Dedup.shingleCandidatesFromDocs(docs0))
+    val ((candBounds, docs, cap, caches), wA) =
+      SparkWork.measure(spark)(Dedup.shingleCandidatesFromDocs(docs0))
     val nDocs = docs.count()
     // dfreq shape: what the linear candidate bound actually sums over
     val dfreqs = caches(1)
@@ -406,18 +353,18 @@ object ScaleRehearsal {
     // B: candidate join + pair groupBy + bounds, persisted so C and D
     // measure only their own work
     val cb = candBounds.persist()
-    val (nCand, tB, maxB, byB) = timed(cb.count())
+    val (nCand, wB) = SparkWork.measure(spark)(cb.count())
     // C: the integer prefilter
     val bounded = cb.filter(col("ub").cast("double") /
       (col("na") + col("nb") - col("ub")).cast("double") >= 0.6).persist()
-    val (nBounded, tC, maxC, _) = timed(bounded.count())
+    val (nBounded, wC) = SparkWork.measure(spark)(bounded.count())
     // D: exact re-rank + emission (dd2's jac >= 0.6 tail, verbatim)
     val pairs = Dedup.rerankShared(bounded, docs)
       .withColumn("jac", col("shared").cast("double") /
         (col("na") + col("nb") - col("shared")).cast("double"))
       .filter(col("jac") >= 0.6)
       .select("i", "j", "jac")
-    val (nPairs, tD, maxD, _) = timed(pairs.count())
+    val (nPairs, wD) = SparkWork.measure(spark)(pairs.count())
     cb.unpersist(blocking = false)
     bounded.unpersist(blocking = false)
     caches.foreach(_.unpersist(blocking = false))
@@ -428,10 +375,10 @@ object ScaleRehearsal {
       s""""rare_shingles":${shape.getLong(1)},""" +
       s""""hot_shingles":${if (shape.isNullAt(2)) 0L else shape.getLong(2)},""" +
       s""""max_dfreq":${shape.getLong(3)},""" +
-      s""""stageA_kernel_dfreq_cap":{"sec":${fmt3(tA)},"max_task_rows":$maxA,"shuffle_write_mb":${fmt3(byA / 1e6)}},""" +
-      s""""stageB_candidates":{"sec":${fmt3(tB)},"rows":$nCand,"max_task_rows":$maxB,"shuffle_write_mb":${fmt3(byB / 1e6)}},""" +
-      s""""stageC_prefilter":{"sec":${fmt3(tC)},"rows":$nBounded,"max_task_rows":$maxC},""" +
-      s""""stageD_rerank":{"sec":${fmt3(tD)},"pairs":$nPairs,"max_task_rows":$maxD}}"""
+      s""""stageA_kernel_dfreq_cap":{"sec":${fmt3(wA.seconds)},"max_task_rows":${wA.maxTaskRecords},"shuffle_write_mb":${fmt3(wA.shuffleBytes / 1e6)}},""" +
+      s""""stageB_candidates":{"sec":${fmt3(wB.seconds)},"rows":$nCand,"max_task_rows":${wB.maxTaskRecords},"shuffle_write_mb":${fmt3(wB.shuffleBytes / 1e6)}},""" +
+      s""""stageC_prefilter":{"sec":${fmt3(wC.seconds)},"rows":$nBounded,"max_task_rows":${wC.maxTaskRecords}},""" +
+      s""""stageD_rerank":{"sec":${fmt3(wD.seconds)},"pairs":$nPairs,"max_task_rows":${wD.maxTaskRecords}}}"""
     println(report)
     val f = java.nio.file.Paths.get(s"$out/dd2_profile.json")
     java.nio.file.Files.createDirectories(f.getParent)
@@ -458,21 +405,16 @@ object ScaleRehearsal {
     val out = ensureOrganic(spark, mult)
     graft.queries.QueryCache.clearMemo(graft.queries.Dedup.MemoKinds)
     spark.catalog.clearCache()
-    def timed[A](body: => A): (A, Double, Long) = {
-      val t0 = System.nanoTime()
-      val (a, maxRows) = withMaxTaskRows(spark)(body)
-      (a, (System.nanoTime() - t0) / 1e9, maxRows)
-    }
     // A: the minhash kernel (32 hashes per doc over its shingle set)
     val sigs = Dedup.sigsOf(
       spark.read.parquet(s"$out/documents.parquet")
         .select("doc_id", "text")).persist()
-    val (nDocs, tA, maxA) = { val (n, t, m) = timed(sigs.count()); (n, t, m) }
+    val (nDocs, wA) = SparkWork.measure(spark)(sigs.count())
     // B: band explode + adaptive cap (cap derivation materializes sizes)
     val banded = sigs.select(col("doc_id"),
       explode(HashFunctions.lshBands(col("sig"), bands = 16, rows = 2))
         .as("band"))
-    val ((capped, cap, sizes), tB, maxB) = timed {
+    val ((capped, cap, sizes), wB) = SparkWork.measure(spark) {
       val r = BucketCap.capBucketsAdaptive(banded, Seq("band"),
         Dedup.LshBucketFloor)
       r._1.persist().count() // the one persist — r._1 IS `capped` below
@@ -489,7 +431,7 @@ object ScaleRehearsal {
     // the gated query's own stage, so the conf-gated shuffle A/B
     // (minimalband / packpairs) profiles the exact production shape
     val pairs = Dedup.bandCandidatePairs(capped).persist()
-    val (nPairs, tC, maxC) = { val (n, t, m) = timed(pairs.count()); (n, t, m) }
+    val (nPairs, wC) = SparkWork.measure(spark)(pairs.count())
     // D: signature attach + agreement re-rank (dd3's tail, verbatim)
     val scored = pairs
       .join(sigs.select(col("doc_id").as("i"), col("sig").as("sig_i")), "i")
@@ -498,7 +440,7 @@ object ScaleRehearsal {
         HashFunctions.minhashSimilarity(col("sig_i"), col("sig_j"))
           .as("est_jac"))
       .filter(col("est_jac") >= 0.5)
-    val (nOut, tD, maxD) = { val (n, t, m) = timed(scored.count()); (n, t, m) }
+    val (nOut, wD) = SparkWork.measure(spark)(scored.count())
     Seq(sigs, capped, pairs).foreach(_.unpersist(blocking = false))
     sizes.unpersist(blocking = false)
     val report =
@@ -507,10 +449,10 @@ object ScaleRehearsal {
       s""""cand_rows_bound":${if (bound.isNullAt(0)) 0L else bound.getLong(0)},""" +
       s""""capped_buckets":${if (bound.isNullAt(1)) 0L else bound.getLong(1)},""" +
       s""""max_bucket":${if (bound.isNullAt(2)) 0L else bound.getLong(2)},""" +
-      s""""stageA_minhash":{"sec":${fmt3(tA)},"max_task_rows":$maxA},""" +
-      s""""stageB_band_cap":{"sec":${fmt3(tB)},"max_task_rows":$maxB},""" +
-      s""""stageC_pair_distinct":{"sec":${fmt3(tC)},"rows":$nPairs,"max_task_rows":$maxC},""" +
-      s""""stageD_attach_rerank":{"sec":${fmt3(tD)},"rows":$nOut,"max_task_rows":$maxD}}"""
+      s""""stageA_minhash":{"sec":${fmt3(wA.seconds)},"max_task_rows":${wA.maxTaskRecords}},""" +
+      s""""stageB_band_cap":{"sec":${fmt3(wB.seconds)},"max_task_rows":${wB.maxTaskRecords}},""" +
+      s""""stageC_pair_distinct":{"sec":${fmt3(wC.seconds)},"rows":$nPairs,"max_task_rows":${wC.maxTaskRecords}},""" +
+      s""""stageD_attach_rerank":{"sec":${fmt3(wD.seconds)},"rows":$nOut,"max_task_rows":${wD.maxTaskRecords}}}"""
     println(report)
     val f = java.nio.file.Paths.get(s"$out/dd3_profile.json")
     java.nio.file.Files.createDirectories(f.getParent)
@@ -753,17 +695,12 @@ object ScaleRehearsal {
     import graft.queries.{Dedup, Similarity}
     val out = ensureOrganic(spark, mult)
     if (hier) spark.conf.set(Similarity.SemDedupHierarchicalConf, "true")
-    def timed[A](body: => A): (A, Double, Long) = {
-      val t0 = System.nanoTime()
-      val (a, maxRows) = withMaxTaskRows(spark)(body)
-      (a, (System.nanoTime() - t0) / 1e9, maxRows)
-    }
     // the WHOLE assignment build is inside the timed block — including
     // the corpus scan + normalization, which the hierarchical branch
     // materializes eagerly (its internal e.count()) and the exact
     // branch leaves lazy; timing only assigned.count() would exclude
     // the scan from one arm and not the other, biasing the A/B
-    val ((assigned, eCache, n), tAssign, maxAssign) = timed {
+    val ((assigned, eCache, n), wAssign) = SparkWork.measure(spark) {
       val (a0, e) = Similarity.semDedupAssign(spark, out)
       val a = a0.persist()
       val cnt = a.count()
@@ -771,14 +708,14 @@ object ScaleRehearsal {
     }
     // 1000 = dd17's DefaultBucketCap (the gated cap literal)
     val (dropsDf, caches) = Dedup.semDedupDrops(assigned, 1000L)
-    val (nDrops, tDrops, maxDrops) = timed(dropsDf.count())
+    val (nDrops, wDrops) = SparkWork.measure(spark)(dropsDf.count())
     (Seq(assigned, eCache) ++ caches)
       .foreach(_.unpersist(blocking = false))
     val report =
       s"""{"mode":"semdedup","hier":$hier,"mult":$mult,"n_vecs":$n,""" +
-      s""""assign_sec":${fmt3(tAssign)},"assign_max_task_rows":$maxAssign,""" +
-      s""""drops":$nDrops,"drops_sec":${fmt3(tDrops)},""" +
-      s""""drops_max_task_rows":$maxDrops}"""
+      s""""assign_sec":${fmt3(wAssign.seconds)},"assign_max_task_rows":${wAssign.maxTaskRecords},""" +
+      s""""drops":$nDrops,"drops_sec":${fmt3(wDrops.seconds)},""" +
+      s""""drops_max_task_rows":${wDrops.maxTaskRecords}}"""
     println(report)
     val f = java.nio.file.Paths.get(
       s"$out/semdedup_${if (hier) "hier" else "exact"}.json")
@@ -901,25 +838,13 @@ object ScaleRehearsal {
     val mult = args.headOption.map(_.toInt).getOrElse(10)
     val src = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // SPARK_GRAFT_MASTER=local-cluster[4,8,8192] runs the SAME rehearsal
     // with executors in SEPARATE JVMs (VERDICT r11 ask #4): local[32]
     // concentrates every executor's shuffle/cache state in one heap —
     // the organic ×200 run needed a 48 GiB driver there — while
     // local-cluster spreads it the way a real cluster does, retiring
-    // the single-JVM ceiling without needing one. Needs SPARK_HOME
-    // (/opt/spark) for the executor launcher; the app classes ride
-    // spark.executor.extraClassPath.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    // the single-JVM ceiling without needing one (see GraftSession.local).
+    //
     // rehearsal legs default onto the artifact store (VERDICT r13 ask
     // #4): the r13 s9 pin proved train-once/serve-same fixes cross-JVM
     // recall flapping (re-fit k-means float nondeterminism), so
@@ -928,37 +853,16 @@ object ScaleRehearsal {
     // carry the corpus identity (Similarity.centroid/pq params), so one
     // shared root across corpora/mults can never serve a wrong-corpus
     // artifact. SPARK_GRAFT_REFIT=1 forces in-session re-fit (store
-    // off); an explicit SPARK_GRAFT_EXTRA_CONF dir wins (it is applied
-    // AFTER this default, and later .config calls override).
-    if (!sys.env.get("SPARK_GRAFT_REFIT").contains("1"))
-      builder.config(graft.source.ArtifactStore.DirKey,
-        new java.io.File("target/rehearsal/artifacts").getAbsolutePath)
-    // arbitrary session confs for the A/B knobs, e.g.
+    // off); an explicit SPARK_GRAFT_EXTRA_CONF dir wins (it is set
+    // after this default), as do its A/B knobs, e.g.
     // SPARK_GRAFT_EXTRA_CONF='spark.graft.dd3.minimalband=true'.
-    // Comma-separated k=v; a fragment WITHOUT '=' (e.g. a comma inside
-    // a value) fails loudly instead of silently mangling the session
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(",")
-      .filter(_.trim.nonEmpty).foreach { kv =>
-        require(kv.contains("="),
-          s"SPARK_GRAFT_EXTRA_CONF fragment without '=': '$kv' " +
-            "(comma-containing values are not supported)")
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k.trim, v.trim)
-      })
-    if (master.startsWith("local-cluster")) {
-      val classes = Seq("target/scala-2.13/classes")
-        .map(p => new java.io.File(p).getAbsolutePath)
-        .filter(p => new java.io.File(p).isDirectory)
-        .mkString(java.io.File.pathSeparator)
-      builder.config("spark.executor.extraClassPath", classes)
-      // the master string's third field is the WORKER's capacity in MiB;
-      // the executor JVM is still sized by spark.executor.memory (default
-      // 1g — an instant OOM at ×200). Size the executor to the worker.
-      val workerMb = master.split("[\\[\\],]")(3).trim
-      builder.config("spark.executor.memory",
-        sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", s"${workerMb}m"))
-    }
-    val spark = builder.getOrCreate()
+    val store =
+      if (sys.env.get("SPARK_GRAFT_REFIT").contains("1")) Nil
+      else Seq(graft.source.ArtifactStore.DirKey ->
+        new java.io.File("target/rehearsal/artifacts").getAbsolutePath)
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus,
+      graft.GraftSession.masterFromEnv,
+      store ++ graft.GraftSession.extraConfFromEnv)
     spark.sparkContext.setLogLevel("WARN")
     // floodrecall composes with the corpus flags ("floodrecall
     // degenerate" / "floodrecall organic"), so it must win the dispatch

@@ -70,35 +70,16 @@ object StreamRehearsal {
 
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("target/rehearsal/sf0.1x10")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val shards = sys.env.getOrElse("SPARK_GRAFT_STREAM_SHARDS", "64").toInt
     val triggerFiles =
       sys.env.getOrElse("SPARK_GRAFT_STREAM_TRIGGER_FILES", "1").toInt
     val out = "target/rehearsal/stream_" +
       new java.io.File(src).getName
     // SPARK_GRAFT_MASTER=local-cluster[n,c,mem] runs the same stream
-    // rehearsal with executors in separate JVMs (ScaleRehearsal's
-    // launch facts apply: export SPARK_SCALA_VERSION, executor memory
-    // derived from the master string's worker field)
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    if (master.startsWith("local-cluster")) {
-      val classes = Seq("target/scala-2.13/classes")
-        .map(p => new java.io.File(p).getAbsolutePath)
-        .filter(p => new java.io.File(p).isDirectory)
-        .mkString(java.io.File.pathSeparator)
-      builder.config("spark.executor.extraClassPath", classes)
-      val workerMb = master.split("[\\[\\],]")(3).trim
-      builder.config("spark.executor.memory",
-        sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", s"${workerMb}m"))
-    }
-    val spark = builder.getOrCreate()
+    // rehearsal with executors in separate JVMs (export
+    // SPARK_SCALA_VERSION; see GraftSession.local)
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus,
+      graft.GraftSession.masterFromEnv)
     spark.sparkContext.setLogLevel("WARN")
     val report = new StringBuilder
     report ++= s"""{"src":"$src","shards":$shards,"trigger_files":$triggerFiles,"""
