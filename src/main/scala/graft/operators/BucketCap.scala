@@ -33,10 +33,14 @@ import org.apache.spark.sql.functions._
 object BucketCap {
 
   /** Keep only rows whose bucket (all `keyCols` equal) has ≤ `cap`
-    * members.
+    * members. Eager, through [[splitByOccupancyBounded]]: its one size
+    * job also fills a persisted `df`'s cache, so the consumers plan over
+    * the cache's real size. Over a cold cache, AQE picks a self-join's
+    * strategy by which cache stage finishes first, and the same input
+    * runs zero, one or two extra n-row exchanges from run to run.
     */
   def capBuckets(df: DataFrame, keyCols: Seq[String], cap: Long): DataFrame =
-    splitByOccupancy(df, keyCols, cap)._1
+    splitByOccupancyBounded(df, keyCols, cap)._1
 
   /** Two-regime occupancy split: rows in sub-cap buckets vs rows in
     * over-cap (FLOOD) buckets — the shared front half of the

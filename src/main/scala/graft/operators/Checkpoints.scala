@@ -23,20 +23,17 @@ private[graft] object Checkpoints {
     * above the bound the loop leaves AQE exactly as configured — a
     * billion-node graph's contrib shuffle wants the skew handling.
     */
-  val IterAqeMaxRowsConf = "spark.graft.iter.aqe.maxrows"
-  private val IterAqeMaxRowsDefault = 1000000L
+  val IterAqeMaxRows = 1000000L
 
   /** Turn AQE off for a small iteration loop (`rows` is the per-round
     * frame's row count, known to the caller from its setup probe) and
     * return the restore thunk the caller MUST invoke in its finally.
-    * No-op (returns a no-op thunk) when `rows` is at or above the
-    * configured bound.
+    * No-op (returns a no-op thunk) when `rows` is at or above
+    * [[IterAqeMaxRows]].
     */
   def disableAqeForSmallLoop(s: org.apache.spark.sql.SparkSession,
       rows: Long): () => Unit = {
-    val bound = s.conf.getOption(IterAqeMaxRowsConf)
-      .map(_.toLong).getOrElse(IterAqeMaxRowsDefault)
-    if (rows >= bound) () => ()
+    if (rows >= IterAqeMaxRows) () => ()
     else {
       val key = "spark.sql.adaptive.enabled"
       val before = s.conf.getOption(key)

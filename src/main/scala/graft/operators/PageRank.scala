@@ -185,8 +185,9 @@ object PageRank {
       // with iters=10 over a synthetic 500k-edge, 200k-node graph (past
       // the driver tier), 10 alternating pairs: 4.50 s median
       // [q1 4.23, q3 4.71] with the toggle vs 7.25 s [6.77, 7.65] with
-      // `spark.graft.iter.aqe.maxrows=0`; the toggle won all 10. The conf
-      // is restored in the outer finally (failure paths included).
+      // the bound (`Checkpoints.IterAqeMaxRows`) at 0, i.e. AQE left on;
+      // the toggle won all 10. The conf is restored in the outer finally
+      // (failure paths included).
       aqeRestore = Some(Checkpoints.disableAqeForSmallLoop(
         edges.sparkSession, n.toLong))
       var it = 0

@@ -83,93 +83,19 @@ object Dedup {
   private[graft] def sigsOf(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), sigExpr.as("sig"))
 
-  /** dd3 shuffle-experiment confs (VERDICT r12 ask #2) — both default
-    * OFF, leaving the gated plan byte-identical; both produce the SAME
-    * candidate set, so the oracle gate stays green in any position:
-    *
-    *  - `minimalband`: emit each colliding pair ONCE, from its minimal
-    *    shared SURVIVING band (each side carries its post-cap band
-    *    array; a map-side HOF filter keeps only the minimal emission),
-    *    removing the pair `distinct()` shuffle (465M → 55M rows at
-    *    organic ×400, ×8.4 duplicate emissions) at the cost of the
-    *    band arrays riding the bucket self-join — adjudicated "roughly
-    *    byte-neutral" on paper in r12, measured via `ScaleRehearsal
-    *    <mult> dd3profile` both ways (BASELINE.md records the table).
-    *  - `packpairs`: shuffle the pair `distinct()` as ONE packed
-    *    8-byte long (i << 32 | j) instead of two longs, halving the
-    *    key bytes of dd3's dominant shuffle; requires doc_id < 2³¹
-    *    (true at every rehearsal scale; an experiment knob, not a
-    *    default).
-    */
-  private[graft] val Dd3MinimalBandConf = "spark.graft.dd3.minimalband"
-  private[graft] val Dd3PackPairsConf = "spark.graft.dd3.packpairs"
-
-  /** dd2's sibling of [[Dd3PackPairsConf]]: pack the candidate
-    * groupBy's (i, j) key into one 8-byte long (same aggregate, half
-    * the key bytes on dd2's dominant shuffle). Default OFF; the ×800
-    * spill-regime experiment's knob.
-    */
-  private[graft] val Dd2PackPairsConf = "spark.graft.dd2.packpairs"
-
-  /** The pack precondition made LOUD: `i << 32 | j` is a bijection only
-    * for ids in [0, 2³¹) — past that the sign bit corrupts the unpack
-    * and distinct() would silently merge unrelated pairs. raise_error
-    * is a codegen'd branch on the experiment arms only; the gated
-    * default never evaluates it.
-    */
-  private def packGuard(c: Column): Column =
-    when(c < 0 || c >= (1L << 31),
-      raise_error(concat(
-        lit("packpairs requires doc_id in [0, 2^31): "), c.cast("string"))))
-      .otherwise(c)
-
   /** Candidate (i, j) pairs from a capped banded frame — the stage-C
     * shape shared by the gated dd3 pipeline and the dd3profile
-    * rehearsal mode, so the conf-gated shuffle experiments above apply
-    * to BOTH (one definition, honest A/B). Output rows are unique
-    * pairs in every branch.
+    * rehearsal mode (one definition, so the rehearsal profiles the
+    * gated plan): bucket self-join, then the pair `distinct()`, so each
+    * pair is emitted once however many bands it shares.
     */
   private[graft] def bandCandidatePairs(capped: DataFrame): DataFrame = {
-    val conf = capped.sparkSession.conf
-    val minimalband = conf.get(Dd3MinimalBandConf, "false").toBoolean
-    val packpairs = conf.get(Dd3PackPairsConf, "false").toBoolean
-    // the two shuffle arms are mutually-exclusive A/B variants — an
-    // operator setting packpairs on top of an exported minimalband
-    // session conf would silently profile the wrong arm otherwise
-    require(!(minimalband && packpairs),
-      s"$Dd3MinimalBandConf and $Dd3PackPairsConf are mutually " +
-        "exclusive A/B arms — unset one")
     val a = capped.alias("a")
     val b = capped.alias("b")
-    if (minimalband) {
-      // per-doc SURVIVING band arrays (post-cap, so the minimal-band
-      // rule sees exactly the buckets the join sees: a pair whose
-      // globally-minimal shared band was capped away still emits from
-      // its smallest surviving one — candidate set unchanged)
-      val surv = capped.groupBy("doc_id")
-        .agg(sort_array(collect_list(col("band"))).as("bands"))
-      val wa = capped.join(surv, "doc_id").alias("a")
-      val wb = capped.join(surv, "doc_id").alias("b")
-      wa.join(wb, col("a.band") === col("b.band") &&
-          col("a.doc_id") < col("b.doc_id"))
-        .filter(not(exists(col("a.bands"), x =>
-          x.getField("band") < col("a.band").getField("band") &&
-            array_contains(col("b.bands"), x))))
-        .select(col("a.doc_id").as("i"), col("b.doc_id").as("j"))
-    } else if (packpairs) {
-      a.join(b, col("a.band") === col("b.band") &&
-          col("a.doc_id") < col("b.doc_id"))
-        .select(shiftleft(packGuard(col("a.doc_id")), 32)
-          .bitwiseOR(packGuard(col("b.doc_id"))).as("p"))
-        .distinct()
-        .select(shiftright(col("p"), 32).as("i"),
-          col("p").bitwiseAND(lit(0xffffffffL)).as("j"))
-    } else {
-      a.join(b, col("a.band") === col("b.band") &&
-          col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("i"), col("b.doc_id").as("j"))
-        .distinct()
-    }
+    a.join(b, col("a.band") === col("b.band") &&
+        col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("i"), col("b.doc_id").as("j"))
+      .distinct()
   }
 
   /** dd3's banding pipeline from a PERSISTED (doc_id, sig) frame: band
@@ -321,30 +247,13 @@ object Dedup {
     // candidate pairs carry their rare-shingle overlap AND both docs'
     // set sizes for free (the same shuffle a DISTINCT would need):
     // shared = shared_rare + shared_hot; nsh is constant per doc, so
-    // first() is deterministic. Conf-gated spill experiment (r12 ask
-    // #7's "spill-lightened pair rows"): pack (i, j) into ONE 8-byte
-    // group key — same aggregate, half the key bytes on dd2's dominant
-    // shuffle; result-identical (the pack is a bijection for
-    // doc_id < 2³¹, true at every rehearsal scale).
-    val joined = a.join(b,
+    // first() is deterministic.
+    val cand = a.join(b,
         col("a.shingle") === col("b.shingle") &&
           col("a.doc_id") < col("b.doc_id"))
-    val pack = docs0.sparkSession.conf
-      .get(Dd2PackPairsConf, "false").toBoolean
-    val cand =
-      if (pack)
-        joined
-          .groupBy(shiftleft(packGuard(col("a.doc_id")), 32)
-            .bitwiseOR(packGuard(col("b.doc_id"))).as("p"))
-          .agg(count(lit(1)).as("shared_rare"),
-            first(col("a.nsh")).as("na"), first(col("b.nsh")).as("nb"))
-          .select(shiftright(col("p"), 32).as("i"),
-            col("p").bitwiseAND(lit(0xffffffffL)).as("j"),
-            col("shared_rare"), col("na"), col("nb"))
-      else joined
-        .groupBy(col("a.doc_id").as("i"), col("b.doc_id").as("j"))
-        .agg(count(lit(1)).as("shared_rare"),
-          first(col("a.nsh")).as("na"), first(col("b.nsh")).as("nb"))
+      .groupBy(col("a.doc_id").as("i"), col("b.doc_id").as("j"))
+      .agg(count(lit(1)).as("shared_rare"),
+        first(col("a.nsh")).as("na"), first(col("b.nsh")).as("nb"))
     // upper-bound prefilter before touching any array: shared_hot ≤
     // min(nhot_i, nhot_j) and jac is increasing in shared, so pairs whose
     // bound can't reach the threshold are dropped using only integer

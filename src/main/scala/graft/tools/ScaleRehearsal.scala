@@ -428,8 +428,8 @@ object ScaleRehearsal {
       sum(when(col("_bsz") > cap, 1L)).as("capped_buckets"),
       max(col("_bsz")).as("max_bucket")).collect().head
     // C: bucket self-join + pair uniquing — Dedup.bandCandidatePairs,
-    // the gated query's own stage, so the conf-gated shuffle A/B
-    // (minimalband / packpairs) profiles the exact production shape
+    // the gated query's own stage, so this profiles the exact
+    // production shape
     val pairs = Dedup.bandCandidatePairs(capped).persist()
     val (nPairs, wC) = SparkWork.measure(spark)(pairs.count())
     // D: signature attach + agreement re-rank (dd3's tail, verbatim)
@@ -854,8 +854,8 @@ object ScaleRehearsal {
     // shared root across corpora/mults can never serve a wrong-corpus
     // artifact. SPARK_GRAFT_REFIT=1 forces in-session re-fit (store
     // off); an explicit SPARK_GRAFT_EXTRA_CONF dir wins (it is set
-    // after this default), as do its A/B knobs, e.g.
-    // SPARK_GRAFT_EXTRA_CONF='spark.graft.dd3.minimalband=true'.
+    // after this default), as do its other session confs, e.g.
+    // SPARK_GRAFT_EXTRA_CONF='spark.graft.memo.disabled=true'.
     val store =
       if (sys.env.get("SPARK_GRAFT_REFIT").contains("1")) Nil
       else Seq(graft.source.ArtifactStore.DirKey ->

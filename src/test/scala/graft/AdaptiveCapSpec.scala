@@ -114,17 +114,15 @@ class AdaptiveCapSpec extends SparkSuite {
     assert(spark.conf.get(key) == "false")
     restore()
     assert(spark.conf.get(key) == before)
-    // custom bound via conf
-    spark.conf.set(ck.IterAqeMaxRowsConf, "10")
-    try {
-      val r2 = ck.disableAqeForSmallLoop(spark, rows = 10L)
-      assert(spark.conf.get(key) == before, "rows == bound must not toggle")
-      r2()
-      val r3 = ck.disableAqeForSmallLoop(spark, rows = 9L)
-      assert(spark.conf.get(key) == "false")
-      r3()
-      assert(spark.conf.get(key) == before)
-    } finally spark.conf.unset(ck.IterAqeMaxRowsConf)
+    // the bound is exclusive: rows == IterAqeMaxRows leaves AQE alone,
+    // one row fewer turns it off
+    val r2 = ck.disableAqeForSmallLoop(spark, rows = ck.IterAqeMaxRows)
+    assert(spark.conf.get(key) == before, "rows == bound must not toggle")
+    r2()
+    val r3 = ck.disableAqeForSmallLoop(spark, rows = ck.IterAqeMaxRows - 1)
+    assert(spark.conf.get(key) == "false")
+    r3()
+    assert(spark.conf.get(key) == before)
   }
 
   test("dd2's doc-freq cut is monotone in the cap on the real corpus") {

@@ -1151,41 +1151,17 @@ class DedupSimilaritySpec extends SparkSuite {
     }
   }
 
-  test("dd2 packed pair-key variant is result-identical to the gated " +
-    "two-long groupBy (r12 ask #7 spill knob)") {
-    import graft.queries.Dedup
-    def run(): Set[(Long, Long, Double)] = {
-      graft.queries.QueryCache.clearMemo(Dedup.MemoKinds)
-      val (p, _, caches) = Dedup.shingleJaccardPairsWithCaches(spark, sf)
-      val out = p.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      caches.foreach(_.unpersist(blocking = false))
-      out
-    }
-    val base = run()
-    spark.conf.set(Dedup.Dd2PackPairsConf, "true")
-    val packed = try run()
-    finally spark.conf.unset(Dedup.Dd2PackPairsConf)
-    assert(base.nonEmpty, "fixture produced no near-dup pairs")
-    assert(packed == base,
-      s"packed dd2 diverged: ${packed.size} vs ${base.size} pairs")
-  }
-
-  test("dd3 shuffle A/B variants emit the identical unique candidate " +
-    "set: minimal-SURVIVING-band and packed-pair-key vs the gated " +
-    "distinct (r12 ask #2)") {
+  test("dd3 band candidates: gated set, each pair once") {
     import spark.implicits._
     import graft.queries.Dedup
     import graft.functions.HashFunctions.lshBands
     import graft.operators.BucketCap
     // fixture: an 1100-doc flood bucket on band 0 (capped — floor is
     // 1000 and p99.9 of the rest is 1), inside which docs 5 and 6 ALSO
-    // share band 3 (a 2-doc surviving bucket): their globally-minimal
-    // shared band is the CAPPED one, so a naive minimal-band rule that
-    // looks at pre-cap arrays would drop the pair — the surviving-band
-    // rule emits it from band 3, matching the gated distinct. Docs
-    // 2000/2001 share all 16 bands (the ×16 duplicate-emission case
-    // the distinct/minimal machinery exists for).
+    // share band 3 (a 2-doc surviving bucket): the pair's minimal shared
+    // band is the CAPPED one, so it must still come out of band 3.
+    // Docs 2000/2001 share all 16 bands (the ×16 duplicate emission the
+    // pair distinct() exists for).
     def sigOf(id: Long): Seq[Long] = {
       val base = Array.tabulate(32)(s => 1000000L + id * 100 + s)
       base(0) = 7L; base(1) = 7L
@@ -1198,28 +1174,16 @@ class DedupSimilaritySpec extends SparkSuite {
     val banded = sigs.select(col("doc_id"),
       explode(lshBands(col("sig"), bands = 16, rows = 2)).as("band"))
       .persist()
-    def pairsUnder(conf: Option[String]): (Set[(Long, Long)], Int) = {
-      conf.foreach(c => spark.conf.set(c, "true"))
-      try {
-        val (capped, _, sizes) = BucketCap.capBucketsAdaptive(
-          banded, Seq("band"), graft.queries.Dedup.LshBucketFloor)
-        val out = Dedup.bandCandidatePairs(capped)
-          .collect().map(r => (r.getLong(0), r.getLong(1)))
-        sizes.unpersist(blocking = false)
-        (out.toSet, out.length)
-      } finally conf.foreach(spark.conf.unset)
-    }
     try {
-      val (base, nBase) = pairsUnder(None)
-      val (minl, nMin) = pairsUnder(Some(Dedup.Dd3MinimalBandConf))
-      val (packed, nPack) = pairsUnder(Some(Dedup.Dd3PackPairsConf))
-      assert(base == Set((5L, 6L), (2000L, 2001L)),
-        s"gated candidate set wrong: $base")
-      assert(minl == base, s"minimal-band diverged: $minl")
-      assert(packed == base, s"packed-pairs diverged: $packed")
-      // every variant emits each pair exactly once
-      assert(nBase == base.size && nMin == base.size && nPack == base.size,
-        s"duplicate emissions: base $nBase, minimal $nMin, packed $nPack")
+      val (capped, _, sizes) = BucketCap.capBucketsAdaptive(
+        banded, Seq("band"), Dedup.LshBucketFloor)
+      val out = Dedup.bandCandidatePairs(capped)
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+      sizes.unpersist(blocking = false)
+      assert(out.toSet == Set((5L, 6L), (2000L, 2001L)),
+        s"gated candidate set wrong: ${out.toSet}")
+      assert(out.length == out.toSet.size,
+        s"duplicate emissions: ${out.toSeq}")
     } finally banded.unpersist(blocking = false)
   }
 
