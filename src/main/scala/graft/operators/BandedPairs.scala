@@ -71,14 +71,11 @@ object BandedPairs {
     // DedupSimilaritySpec).
     val overKeys: Option[Map[Int, Array[Long]]] =
       if (maxB <= cap) Some(Map.empty)
-      else {
-        val rows = sizes.filter(col("_bsz") > cap).select("bk")
-          .limit(MaxInRowKeys + 1).collect()
-        if (rows.length > MaxInRowKeys) None
-        else Some(rows.map(_.getStruct(0))
+      else DriverTier.collectBounded(
+          sizes.filter(col("_bsz") > cap).select("bk"), MaxInRowKeys)
+        .map(_.map(_.getStruct(0))
           .map(st => (st.getInt(0), st.getLong(1)))
           .groupBy(_._1).map { case (b, ks) => b -> ks.map(_._2) })
-      }
     val scored = overKeys match {
       case Some(over) =>
         def slice(h: Column, b: Int): Column =

@@ -80,8 +80,8 @@ object BucketCap {
     * join (2-3 scans of `df`'s plan) and pays the flood branch even when
     * no bucket is over cap — the common case at healthy occupancy. This
     * variant runs the size aggregate ONCE (map-side combined; only
-    * (key, count) survivors reach the driver, `limit`-bounded at
-    * [[MaxOversizeKeys]]+1 rows) and returns:
+    * (key, count) survivors reach the driver, through
+    * [[DriverTier.collectBounded]] at [[MaxOversizeKeys]]) and returns:
     *
     *  - `(df, None)` when NO bucket is over cap — callers skip the flood
     *    branch entirely, so the healthy-corpus plan carries no anti-join,
@@ -120,20 +120,20 @@ object BucketCap {
       .agg(count(lit(1)).as("_bsz"))
       .filter(col("_bsz") > cap)
       .select(keyCols.map(col): _*)
-    val head = oversize.limit(MaxOversizeKeys + 1).collect()
-    if (head.isEmpty) (df, None, None)
-    else if (head.length <= MaxOversizeKeys) {
-      import scala.jdk.CollectionConverters._
-      val local = df.sparkSession
-        .createDataFrame(head.toSeq.asJava, oversize.schema)
-      val cols = df.columns.map(col).toIndexedSeq
-      (df.join(broadcast(local), keyCols, "left_anti").select(cols: _*),
-        Some(df.join(broadcast(local), keyCols, "left_semi")
-          .select(cols: _*)),
-        Some(head))
-    } else {
-      val (ok, flood) = splitByOccupancy(df, keyCols, cap)
-      (ok, Some(flood), None)
+    DriverTier.collectBounded(oversize, MaxOversizeKeys) match {
+      case Some(head) if head.isEmpty => (df, None, None)
+      case Some(head) =>
+        import scala.jdk.CollectionConverters._
+        val local = df.sparkSession
+          .createDataFrame(head.toSeq.asJava, oversize.schema)
+        val cols = df.columns.map(col).toIndexedSeq
+        (df.join(broadcast(local), keyCols, "left_anti").select(cols: _*),
+          Some(df.join(broadcast(local), keyCols, "left_semi")
+            .select(cols: _*)),
+          Some(head))
+      case None =>
+        val (ok, flood) = splitByOccupancy(df, keyCols, cap)
+        (ok, Some(flood), None)
     }
   }
 

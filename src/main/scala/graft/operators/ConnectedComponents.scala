@@ -2,8 +2,9 @@ package graft.operators
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Connected components over an edge list — the cluster-formation
   * primitive behind near-dup dedup ("keep one document per duplicate
@@ -50,43 +51,55 @@ object ConnectedComponents {
 
   /** [[components]] with a DRIVER-TIER fast path (guide §1.2: fix the
     * distributed algorithm first — and the cheapest distributed
-    * algorithm for a bounded edge list is none at all): when the edge
-    * list holds at most `maxRows` rows, collect it (one bounded
-    * `limit(maxRows+1)` job — it short-circuits, so an over-bound graph
-    * pays one bounded scan, not a full pass) and run union-find with
-    * min-label canonicalization on the driver. The distributed loop
-    * costs 4-6 job submissions per round (hook join, shortcut join,
-    * checkpoint, convergence count) — ~1-2 s of pure driver/scheduler
-    * latency for a graph of a few dozen edges, which is the organic
-    * regime of every gated near-dup graph (dd8/dd14/mm7: tens of pairs
-    * at sf0.1, within the same [[DriverTier]] bound that sizes the
-    * session memo). Past the bound, or for non-long id columns, the
-    * Pregel loop runs unchanged — no scale cliff: 200k collected edges
-    * ≈ 3 MB, the same driver tier the memoized component map holds.
+    * algorithm for a bounded edge list is none at all), returning the
+    * component map held on the driver whenever it fits. When the edge
+    * list holds at most `maxRows` rows ([[DriverTier.collectBounded]])
+    * it runs union-find with min-label canonicalization on the driver.
+    * The distributed loop costs 4-6 job submissions per round (hook
+    * join, shortcut join, checkpoint, convergence count) — ~1-2 s of
+    * pure driver/scheduler latency for a graph of a few dozen edges,
+    * which is the organic regime of every gated near-dup graph
+    * (dd8/dd14/mm7: tens of pairs at sf0.1).
+    *
+    * Past the bound, or for non-long or null ids, the Pregel loop runs
+    * unchanged — no scale cliff. Its map is then held on the driver when
+    * it has at most `2 * maxRows` rows (a map has at most two rows per
+    * edge) and its checkpoint blocks are freed here; a larger map is
+    * returned live, its blocks owned by the caller.
     *
     * The emitted (node, label) SET is identical to [[components]]'s by
     * construction (label = min node id reachable; OperatorPropertySpec
-    * pins both paths against the same union-find reference), so oracle
+    * pins every path against the same union-find reference), so oracle
     * hashes are unchanged whichever path runs.
     */
   def componentsBounded(pairs: DataFrame, src: String, dst: String,
       maxRows: Long, maxIter: Int = 30): DataFrame = {
-    import org.apache.spark.sql.types.LongType
+    import scala.jdk.CollectionConverters._
+    val s = pairs.sparkSession
     val longIds = pairs.schema(src).dataType == LongType &&
       pairs.schema(dst).dataType == LongType
-    if (!longIds || maxRows <= 0 || maxRows > Int.MaxValue - 1)
-      return components(pairs, src, dst, maxIter)
-    val head = pairs.select(col(src).as("i"), col(dst).as("j"))
-      .limit(maxRows.toInt + 1).collect()
-    if (head.length > maxRows || head.exists(r => r.isNullAt(0) || r.isNullAt(1)))
-      return components(pairs, src, dst, maxIter)
+    val head =
+      if (!longIds) None
+      else DriverTier.collectBounded(
+          pairs.select(col(src).as("i"), col(dst).as("j")), maxRows)
+        .filterNot(_.exists(r => r.isNullAt(0) || r.isNullAt(1)))
+    if (head.isEmpty) {
+      val comp = components(pairs, src, dst, maxIter)
+      val held =
+        try DriverTier.collectBounded(comp, 2 * maxRows)
+        catch { case e: Throwable => Checkpoints.free(comp); throw e }
+      return held.fold(comp) { rows =>
+        Checkpoints.free(comp)
+        s.createDataFrame(rows.toSeq.asJava, comp.schema)
+      }
+    }
     // union-find with path compression; canonical label = component min
     val parent = mutable.Map.empty[Long, Long]
     def find(x: Long): Long = {
       val p = parent.getOrElseUpdate(x, x)
       if (p == x) x else { val r = find(p); parent(x) = r; r }
     }
-    head.foreach { r =>
+    head.get.foreach { r =>
       val (ra, rb) = (find(r.getLong(0)), find(r.getLong(1)))
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
@@ -99,15 +112,12 @@ object ConnectedComponents {
         case None => minOf(r) = n
       }
     }
-    import scala.jdk.CollectionConverters._
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node", LongType,
-        nullable = false),
-      org.apache.spark.sql.types.StructField("label", LongType,
-        nullable = false)))
-    val rows: Seq[org.apache.spark.sql.Row] = nodes.sorted.toIndexedSeq
-      .map(n => org.apache.spark.sql.Row(n, minOf(find(n))))
-    pairs.sparkSession.createDataFrame(rows.asJava, schema)
+    val schema = StructType(Seq(
+      StructField("node", LongType, nullable = false),
+      StructField("label", LongType, nullable = false)))
+    val rows: Seq[Row] = nodes.sorted.toIndexedSeq
+      .map(n => Row(n, minOf(find(n))))
+    s.createDataFrame(rows.asJava, schema)
   }
 
   /** Label every node of the undirected graph `pairs(src, dst)` with its

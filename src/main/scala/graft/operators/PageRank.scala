@@ -93,27 +93,24 @@ object PageRank {
       .withColumn("p", col("w") /
         sum("w").over(Window.partitionBy("src")))
       .select(col("src"), col("dst"), col("p"))
-    // DRIVER-TIER fast path (opt-in via driverMaxEdges > 0; the
-    // [[ConnectedComponents.componentsBounded]] pattern): each
+    // DRIVER-TIER fast path (off at driverMaxEdges = 0): each
     // checkpointed round of the distributed loop is 2+ sequential stages
     // plus job-submission latency — ~1.4 s of scheduling for the gated
-    // q58 graph of a few DOZEN nodes. When the normalized edge list
-    // holds at most `driverMaxEdges` rows, collect it with one bounded
-    // short-circuiting `limit(n+1)` job and run the power iteration on
-    // the driver. The arithmetic is the same formula over the same
+    // q58 graph of a few DOZEN nodes. When the normalized edge list fits
+    // [[DriverTier.collectBounded]], the power iteration runs on the
+    // driver. The arithmetic is the same formula over the same
     // normalized p values (only the float SUMMATION ORDER differs —
     // last-ulp noise, orders of magnitude inside the oracle's 1e-9
     // tolerance; PageRankSpec pins both paths against each other). Past
     // the bound, on null ids/probabilities, or on mismatched id types,
     // the distributed loop runs unchanged — no scale cliff.
-    if (driverMaxEdges > 0 && driverMaxEdges <= Int.MaxValue - 1 &&
-        norm0.schema("src").dataType == norm0.schema("dst").dataType) {
-      val head = norm0.limit(driverMaxEdges.toInt + 1).collect()
-      if (head.length <= driverMaxEdges &&
-          !head.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)))
-        return driverLoop(edges.sparkSession, norm0.schema, head, damping,
-          iters, requireFullDegree, tolerance, checkEvery)
-    }
+    val head =
+      if (norm0.schema("src").dataType != norm0.schema("dst").dataType) None
+      else DriverTier.collectBounded(norm0, driverMaxEdges).filterNot(
+        _.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)))
+    if (head.isDefined)
+      return driverLoop(edges.sparkSession, norm0.schema, head.get, damping,
+        iters, requireFullDegree, tolerance, checkEvery)
     val norm = norm0.persist()
     val nodes = norm.select(col("src").as("node"))
       .union(norm.select(col("dst").as("node")))

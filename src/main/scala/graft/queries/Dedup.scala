@@ -420,20 +420,15 @@ object Dedup {
         // local relation on the memo path), so the bounded probe is
         // cheap, and a driver-tier graph — the organic regime — folds on
         // the driver instead of paying 4-6 job submissions per
-        // propagation round; past the bound the Pregel loop runs as
-        // before (same labels either way — OperatorPropertySpec pins it)
+        // propagation round; the map comes back held on the driver
+        // whenever it fits (same labels either way — OperatorPropertySpec)
         val comp = QueryCache.releasingOnFailure(rel) {
           ConnectedComponents.componentsBounded(
             pairs.select("i", "j"), "i", "j", maxRows = DriverTier.MaxRows)
         }
-        if (rel.isEmpty) {
-          // pairs fit the driver tier, so the map does too: snapshot it
-          // and free the components' final checkpoint (normally the
-          // caller-owned block; here the memo is the caller)
-          val v = try QueryCache.snapshot(comp)
-          finally graft.operators.Checkpoints.free(comp)
-          Right((Seq(v), 0L))
-        } else Left((Seq(QueryCache.heldComponents(comp, rel)), 0L, rel))
+        // pairs that fit the memo bound give a map held on the driver
+        if (rel.isEmpty) Right((Seq(QueryCache.snapshot(comp)), 0L))
+        else Left((Seq(comp), 0L, rel))
       }
     (frames.head, rel)
   }

@@ -132,15 +132,14 @@ object MultimodalQueries {
           // componentsBounded: a driver-tier graph — tens of pairs
           // organically — folds as a driver union-find instead of
           // paying per-round job submissions; past the bound the Pregel
-          // loop runs unchanged (same labels — OperatorPropertySpec).
-          // The map is then held on the driver when it fits (dd8's
-          // fallback, QueryCache.heldComponents)
+          // loop runs unchanged and its map is held on the driver when
+          // it fits (same labels — OperatorPropertySpec)
           val comp = QueryCache.releasingOnFailure(rel) {
             graft.operators.ConnectedComponents.componentsBounded(
               scored.filter(col("hamming") <= 12).select("i", "j"),
               "i", "j", maxRows = DriverTier.MaxRows)
           }
-          (QueryCache.heldComponents(comp, rel), cap, rel)
+          (comp, cap, rel)
       }
       val out = comp
         .select(col("node").as("media_id"), col("label").as("cluster_rep"))
@@ -466,10 +465,8 @@ object MultimodalQueries {
             scored.orderBy(col("hamming"), col("i"), col("j")).limit(25))
           // edges just counted ≤ bound — the driver union-find path
           // always engages here (memo population)
-          val comp = graft.operators.ConnectedComponents
-            .componentsBounded(edges, "i", "j", maxRows = bound)
-          val c = try QueryCache.snapshot(comp)
-          finally graft.operators.Checkpoints.free(comp)
+          val c = QueryCache.snapshot(graft.operators.ConnectedComponents
+            .componentsBounded(edges, "i", "j", maxRows = bound))
           scored.unpersist(blocking = false)
           Right((Seq(top, c), cap))
         }

@@ -123,23 +123,6 @@ private[graft] object QueryCache {
     (out, n)
   }
 
-  /** A (node, label) component map, held on the driver when its count
-    * (cheap — `comp` is checkpointed) is within
-    * 2·[[graft.operators.DriverTier.MaxRows]] (a map has at most two rows
-    * per edge), its checkpoint blocks freed HERE instead of leaking for
-    * the session (clearCache cannot free LogicalRDD storage — see
-    * Checkpoints). A larger map stays live, its blocks owned by the
-    * caller. `release` is freed if any of this fails.
-    */
-  def heldComponents(comp: DataFrame, release: Seq[DataFrame]): DataFrame =
-    releasingOnFailure(release) {
-      if (comp.count() <= 2L * graft.operators.DriverTier.MaxRows) {
-        val v = try snapshot(comp)
-        finally graft.operators.Checkpoints.free(comp)
-        local(comp.sparkSession, v)
-      } else comp
-    }
-
   /** Open within-INVOCATION deferred-release scope, or null when closed.
     * See [[withDeferredRelease]]. Thread-local: query functions build and
     * materialize on the caller's thread, and a scope must never leak

@@ -2224,8 +2224,7 @@ object Relational {
         // would race through the full basket pipeline (measured 2-4×
         // duplicate compute of the lineitem distinct at sf0.1). One
         // |edges|-row count is the cheapest possible sequencing barrier —
-        // and it is EXACT, so it doubles as the driver-tier gate below
-        // (no limit-probe needed, unlike componentsBounded).
+        // and it is EXACT, so it doubles as the driver-tier gate below.
         val nEdges = e.count()
         // DRIVER-TIER fast path (r15; guide §1.2 — the CC/PageRank
         // pattern): the support-2 edge frame is a few THOUSAND rows at

@@ -100,6 +100,28 @@ class AdaptiveCapSpec extends SparkSuite {
     sizes2.unpersist()
   }
 
+  test("splitByOccupancyBoundedWithKeys falls back to the lazy split past " +
+      "MaxOversizeKeys") {
+    // MaxOversizeKeys + 1 keys of 3 rows each, all over cap 2, plus 1000
+    // singleton keys that stay under it
+    val nKeys = BucketCap.MaxOversizeKeys + 1L
+    val df = spark.range(0, nKeys * 3 + 1000, 1, 4).select(
+      when(col("id") < nKeys * 3, col("id") % nKeys)
+        .otherwise(col("id")).as("k"),
+      col("id").as("m"))
+    val (ok, flood, keys) =
+      BucketCap.splitByOccupancyBoundedWithKeys(df, Seq("k"), cap = 2L)
+    assert(keys.isEmpty, "oversize keys past the bound were collected")
+    assert(flood.isDefined, "the lazy fallback must return the flood")
+    val (lazyOk, lazyFlood) = BucketCap.splitByOccupancy(df, Seq("k"), 2L)
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val okRows = rows(ok)
+    assert(okRows.size == 1000 && okRows == rows(lazyOk))
+    val floodRows = rows(flood.get)
+    assert(floodRows.size == nKeys * 3 && floodRows == rows(lazyFlood))
+  }
+
   test("disableAqeForSmallLoop toggles only below the bound and restores " +
       "the caller's setting") {
     val key = "spark.sql.adaptive.enabled"

@@ -153,12 +153,25 @@ class OperatorPropertySpec extends SparkSuite {
       .componentsBounded(edges, "i", "j", maxRows = 100000, maxIter = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(local == want, "driver union-find path diverged")
-    // forced distributed fallback (bound below the edge count)
+    // forced distributed fallback, map past 2·maxRows: returned live
     val fb = ConnectedComponents
       .componentsBounded(edges, "i", "j", maxRows = 3, maxIter = 64)
     val fbRows = fb.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     graft.operators.Checkpoints.free(fb)
     assert(fbRows == want, "over-bound fallback path diverged")
+    // distributed loop whose map fits 2·maxRows: |nodes| ≤ 79 ≤ 100 and
+    // 66 edges > 50, so the Pregel loop runs and its map comes back held
+    // on the driver, its checkpoints freed, nothing left for the caller
+    assert(want.size <= 100 && edges.count() > 50, "fixture moved")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    def added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    val held = ConnectedComponents
+      .componentsBounded(edges, "i", "j", maxRows = 50, maxIter = 64)
+    val deadline = System.nanoTime() + 5e9.toLong
+    while (added.nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
+    assert(added.isEmpty, s"held Pregel map left persisted RDDs: $added")
+    assert(held.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
+      want, "held Pregel path diverged")
   }
 
   test("ClusterStream == batch ConnectedComponents on random graphs, any split") {
