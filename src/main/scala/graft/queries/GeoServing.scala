@@ -31,22 +31,19 @@ object GeoServing {
     * lon/lat doubles are re-derived at serve time by q72's exact
     * expression, so the index never stores a rounded double).
     */
-  private final case class Pt(id: Long, klon: Long, klat: Long)
+  private[graft] final case class Pt(id: Long, klon: Long, klat: Long)
 
-  private final case class Index(cells: Map[(Long, Long), Array[Pt]])
+  private[graft] final case class Index(cells: Map[(Long, Long), Array[Pt]])
 
-  private val indexCache =
-    scala.collection.concurrent.TrieMap.empty[String, Index]
-
-  /** Test hook. */
-  private[graft] def clearIndexCache(): Unit = indexCache.clear()
+  /** The built index, held per point-table dir in the session memo. */
+  private[graft] val IndexKind = new QueryCache.Kind[Index]("geo_index")
 
   /** Drop `dir`'s built index so the next [[serveRadius]] rebuilds —
     * the same reload-on-reship hook as [[Serving.refresh]]: a serving
     * process calls this when notified the point layout re-compacted
     * (never a per-query freshness probe on the hot path).
     */
-  def refresh(dir: String): Unit = indexCache.remove(dir)
+  def refresh(dir: String): Unit = QueryCache.forget(dir, Set(IndexKind.name))
 
   private val EarthR = 6371000.0
   /** Meters per degree of latitude = π·R/180, rounded DOWN in the
@@ -55,7 +52,7 @@ object GeoServing {
   private val MPerDegFloor = 111000.0
 
   private def index(s: SparkSession, dir: String): Index =
-    indexCache.getOrElseUpdate(dir, Index(toCells(pointFrame(s, dir))))
+    QueryCache.held(dir, IndexKind)(Index(toCells(pointFrame(s, dir))))
 
   private def pointFrame(s: SparkSession, dir: String) =
     Tables.events(s, dir).select(
@@ -88,9 +85,12 @@ object GeoServing {
     * files — no point-table scan; partition pruning applies when a
     * shard wants only its cells (the driver tier here loads all).
     */
-  def loadIndexInto(s: SparkSession, dir: String, path: String): Unit =
-    indexCache.put(dir, Index(toCells(
-      s.read.parquet(path).select("event_id", "klon", "klat"))))
+  def loadIndexInto(s: SparkSession, dir: String, path: String): Unit = {
+    val built = Index(toCells(
+      s.read.parquet(path).select("event_id", "klon", "klat")))
+    refresh(dir)
+    QueryCache.held(dir, IndexKind)(built)
+  }
 
   /** q72's haversine, in q72's exact IEEE evaluation order (Spark's
     * SIN/COS/ASIN/SQRT/RADIANS are java.lang.Math on the same JVM, and

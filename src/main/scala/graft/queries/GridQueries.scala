@@ -414,7 +414,7 @@ object GridQueries {
     // — repeated Bench/Verify/test invocations each run in their own JVM,
     // so grid copies cannot accumulate across runs on tmpfs hosts.
     Fs.rmTree(s, staging)
-    removeAtExit(s, gridDir)
+    Fs.removeAtExit(s, gridDir)
     val reader = new graft.source.GridReader(s, gridDir,
       prefix = "data_", postfix = ".parquet",
       cadence = java.time.Duration.ofSeconds(cad))
@@ -436,29 +436,6 @@ object GridQueries {
         probes, "id", fetched, axes, valueCols = Seq("v"),
         coordCols = Seq("tc", "h")),
       series, fetched)
-  }
-
-  /** One shutdown hook for all g5 grid dirs of this JVM (idempotent map —
-    * a hook per invocation would grow the JVM's hook list unboundedly in a
-    * long spec session). Each dir keeps the Hadoop conf captured at
-    * registration (with any `fs.s3a.*` credentials), and the hook runs
-    * through Hadoop's ShutdownHookManager ABOVE the FileSystem cache's
-    * close priority — a plain `Runtime.addShutdownHook` races
-    * `FileSystem.closeAll` and can find every FS already closed.
-    */
-  private val exitDirs = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.hadoop.conf.Configuration]()
-  private lazy val exitHook: Unit =
-    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
-      new Runnable {
-        def run(): Unit = exitDirs.forEach { (d, conf) =>
-          try Fs.rmTree(conf, d)
-          catch { case _: Exception => () } // best-effort tmp hygiene
-        }
-      },
-      org.apache.hadoop.fs.FileSystem.SHUTDOWN_HOOK_PRIORITY + 30)
-  private def removeAtExit(s: SparkSession, dir: String): Unit = {
-    exitHook; exitDirs.put(dir, s.sessionState.newHadoopConf()); ()
   }
 
   private val fracsSql =

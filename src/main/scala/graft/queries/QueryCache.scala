@@ -39,34 +39,52 @@ private[graft] object QueryCache {
   private[graft] type Built =
     Either[(Seq[DataFrame], Long, Seq[DataFrame]), (Seq[Snapshot], Long)]
 
-  /** The session query-result memo (dd pair lists and component map, the
-    * pHash artifacts, the ANN tier shortlists). A production pipeline
-    * materializes these bounded results once and feeds every downstream
-    * stage from the materialization; the memo emulates that
+  /** The session memo: one map for the query-result memo
+    * ([[memoized]]) and the session-held values ([[held]]).
+    *
+    * [[memoized]] holds bounded query results (dd pair lists and
+    * component map, the pHash artifacts, the ANN tier shortlists). A
+    * production pipeline materializes these once and feeds every
+    * downstream stage from the materialization; the memo emulates that
     * compute-once contract within one JVM, so e.g. dd2/dd12's shingle
     * machinery, dd8/dd14's component fold, mm5/mm7's pHash pass and
     * s16's tiers each run once per corpus.
     *
-    * Key: (corpus dir, kind, `spark.sql.shuffle.partitions`) — the
-    * layout is part of the key so the partition-invariance sweep still
-    * runs the real machinery under its changed layout. Value: the
-    * driver snapshots of the result plus the cap the build derived.
+    * Key: (corpus dir, kind, [[layout]]) — the layout is part of the
+    * key so the partition-invariance sweep still runs the real
+    * machinery under its changed layout. Value: the driver snapshots of
+    * the result plus the cap the build derived.
     *
     * Raw switch: `spark.graft.memo.disabled=true` (Bench and Verify map
     * SPARK_GRAFT_NO_MEMO=1 onto it) reads nothing and stores nothing,
     * and the build sees a bound of −1, so every run executes its raw
-    * pipeline end to end. Trained-artifact memos (k-means centroids,
-    * BPE merges) are deliberately not here: they stand in for an input
-    * a production pipeline loads from storage, not for the work the
-    * query is measured on.
+    * pipeline end to end.
     *
     * Fallback: a result is held on the driver only while it fits the
     * bound the caller passes (normally [[graft.operators.DriverTier]]);
     * past it the build hands back the live distributed frames and the
     * frames the caller must release, and nothing is stored.
+    *
+    * [[held]] holds what stands in for an input a production pipeline
+    * loads from storage rather than the work a query is measured on:
+    * s9's k-means centroids, the t28/t30 BPE merge table (both cached
+    * over [[graft.source.ArtifactStore]]), the corpus vector counts the
+    * ANN strides derive from, and the built [[Serving]] and
+    * [[GeoServing]] indexes. These sit outside the raw switch: a raw s9
+    * run must load its model, not retrain it, or its body and its
+    * Verify dump could see different centroids.
     */
   private val memo = scala.collection.concurrent.TrieMap
-    .empty[(String, String, String), (Seq[Snapshot], Long)]
+    .empty[(String, String, String), Any]
+
+  /** A [[held]] family: `name` is its memo kind (what [[clearMemo]],
+    * [[memoSize]] and [[forget]] filter on); `A` is the value it holds.
+    */
+  final class Kind[A](val name: String)
+
+  /** The shuffle-partition layout, for entries whose value depends on it. */
+  def layout(s: SparkSession): String =
+    s.conf.get("spark.sql.shuffle.partitions", "")
 
   /** Serve `kind` for `dir` from the memo, or run `build(bound)` and
     * store what it snapshots. Returns (frames, cap, frames the caller
@@ -76,8 +94,9 @@ private[graft] object QueryCache {
   def memoized(s: SparkSession, dir: String, kind: String, maxRows: Long)(
       build: Long => Built): (Seq[DataFrame], Long, Seq[DataFrame]) = {
     val raw = s.conf.getOption("spark.graft.memo.disabled").contains("true")
-    val key = (dir, kind, s.conf.get("spark.sql.shuffle.partitions", ""))
-    val hit = if (raw) None else memo.get(key)
+    val key = (dir, kind, layout(s))
+    val hit = if (raw) None
+      else memo.get(key).map(_.asInstanceOf[(Seq[Snapshot], Long)])
     hit.map(Right(_)).getOrElse(build(if (raw) -1L else maxRows)) match {
       case Left(live) => live
       case Right(e @ (snaps, cap)) =>
@@ -85,6 +104,14 @@ private[graft] object QueryCache {
         (snaps.map(local(s, _)), cap, Nil)
     }
   }
+
+  /** `kind`'s value for (`dir`, `layout`), built once and then served;
+    * the raw switch does not apply. Concurrent first calls may each run
+    * `build`, but all of them return the one value that was published.
+    */
+  def held[A](dir: String, kind: Kind[A], layout: String = "")(
+      build: => A): A =
+    memo.getOrElseUpdate((dir, kind.name, layout), build).asInstanceOf[A]
 
   /** Test and tool hooks: drop, or count, the memo entries whose kind
     * `kinds` accepts (all of them by default) — so a caller clears only
@@ -94,6 +121,12 @@ private[graft] object QueryCache {
     memo.keys.filter(k => kinds(k._2)).foreach(memo.remove)
   def memoSize(kinds: String => Boolean = _ => true): Int =
     memo.keys.count(k => kinds(k._2))
+
+  /** Drop `dir`'s entries whose kind `kinds` accepts — the refresh
+    * paths, after the data behind `dir` changed.
+    */
+  def forget(dir: String, kinds: String => Boolean): Unit =
+    memo.keys.filter(k => k._1 == dir && kinds(k._2)).foreach(memo.remove)
 
   def snapshot(df: DataFrame): Snapshot = (df.schema, df.collect().toSeq)
 

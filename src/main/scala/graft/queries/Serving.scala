@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Driver-tier point-lookup serving for the ANN family (VERDICT r8 ask
@@ -36,17 +36,14 @@ object Serving {
 
   import Similarity.{PqM, PqD}
 
-  private final case class Index(
+  private[graft] final case class Index(
       cents: Array[(Long, Array[Double])],
       cells: Map[Long, Array[(Long, Array[Long])]],
       codebook: IndexedSeq[Map[Long, Array[Double]]],
       refine: Map[Long, Array[Double]])
 
-  private val indexCache =
-    scala.collection.concurrent.TrieMap.empty[String, Index]
-
-  /** Test hook. */
-  private[graft] def clearIndexCache(): Unit = indexCache.clear()
+  /** The built index, held per corpus dir in the session memo. */
+  private[graft] val IndexKind = new QueryCache.Kind[Index]("serving_index")
 
   /** Drop `dir`'s built index so the next [[serve]] rebuilds — the hook
     * a serving process calls when notified of a new artifact version
@@ -57,15 +54,14 @@ object Serving {
     * a reshipped codebook version reaches batch s17 and a refreshed
     * server identically.
     */
-  def refresh(dir: String): Unit = {
-    indexCache.remove(dir)
+  def refresh(dir: String): Unit =
     // the rebuild must re-COUNT the corpus too (ADVICE r11): a refresh
-    // after an in-place corpus change with a live corpusVecs memo would
+    // after an in-place corpus change with a live corpus count would
     // rebuild the whole index at the STALE stride — assignment and
     // centroid extraction would then disagree with any later consumer
     // deriving the stride from the fresh count
-    Similarity.forgetCorpus(dir)
-  }
+    QueryCache.forget(dir,
+      Set(IndexKind.name, Similarity.CorpusVecsKind.name))
 
   /** Build (or reuse) the serving index for `dir`. One Spark pass:
     * the assignment frame joined to the PQ codes, plus the codebook
@@ -73,7 +69,7 @@ object Serving {
     * pays once — never on the query path.
     */
   private def index(s: SparkSession, dir: String): Index =
-    indexCache.getOrElseUpdate(dir, {
+    QueryCache.held(dir, IndexKind) {
       val (assigned0, eCache) = Similarity.ivfAssign(s, dir)
       val codes = Similarity.pqBase(s, dir)
         .select(col("vec_id"), col("codes"))
@@ -83,28 +79,37 @@ object Serving {
         .collect()
       eCache.unpersist(blocking = false)
       val cb = Similarity.pqCodebookDf(s, dir).collect()
-      // the SAME memoized count ivfAssign's stride derivation used —
-      // NOT re-derived from rows.length (ADVICE r11: after an in-place
-      // corpus change with a stale memo, ivfAssign builds at the stale
+      // the SAME held count ivfAssign's stride derivation used — NOT
+      // re-derived from rows.length (ADVICE r11: after an in-place
+      // corpus change with a stale count, ivfAssign builds at the stale
       // stride while rows.length counts the new data, so the extracted
       // "centroids" would not be the assignment's cent_ids and serve()
       // would silently probe empty cells)
-      val st = Similarity.ivfStride(s, dir)
-      val cents = rows.iterator
-        .filter(_.getLong(0) % st == 0)
-        .map(r => r.getLong(0) -> r.getSeq[Double](2).toArray)
-        .toArray.sortBy(_._1)
-      val members = rows.groupBy(_.getLong(1)).map { case (cid, rs) =>
-        cid -> rs.map(r => (r.getLong(0), r.getSeq[Long](3).toArray))
-      }
-      val codebook = (0 until PqM).map { m =>
-        cb.iterator.filter(_.getInt(0) == m)
-          .map(r => r.getLong(1) -> r.getSeq[Double](2).toArray).toMap
-      }
-      val refine = rows.iterator
-        .map(r => r.getLong(0) -> r.getSeq[Double](2).toArray).toMap
-      Index(cents, members, codebook, refine)
-    })
+      buildIndex(rows, cb, Similarity.ivfStride(s, dir))
+    }
+
+  /** The in-memory index from collected `(vec_id, cent_id, unit, codes)`
+    * rows, the collected `(m, cb_id, cvec)` codebook, and the IVF
+    * stride the assignment used (every `stride`-th vector is a
+    * centroid).
+    */
+  private def buildIndex(rows: Array[Row], cb: Array[Row],
+      stride: Long): Index = {
+    val cents = rows.iterator
+      .filter(_.getLong(0) % stride == 0)
+      .map(r => r.getLong(0) -> r.getSeq[Double](2).toArray)
+      .toArray.sortBy(_._1)
+    val members = rows.groupBy(_.getLong(1)).map { case (cid, rs) =>
+      cid -> rs.map(r => (r.getLong(0), r.getSeq[Long](3).toArray))
+    }
+    val codebook = (0 until PqM).map { m =>
+      cb.iterator.filter(_.getInt(0) == m)
+        .map(r => r.getLong(1) -> r.getSeq[Double](2).toArray).toMap
+    }
+    val refine = rows.iterator
+      .map(r => r.getLong(0) -> r.getSeq[Double](2).toArray).toMap
+    Index(cents, members, codebook, refine)
+  }
 
   /** Persist the serving index for `dir` as the deployment artifact an
     * index-BUILD job ships: cell-partitioned parquet of
@@ -173,21 +178,9 @@ object Serving {
       .getOrElse(throw new IllegalStateException(
         s"no committed pq_codebook under $path matching $params"))
       .collect()
-    val st = metaStride
-    val cents = rows.iterator
-      .filter(_.getLong(0) % st == 0)
-      .map(r => r.getLong(0) -> r.getSeq[Double](2).toArray)
-      .toArray.sortBy(_._1)
-    val members = rows.groupBy(_.getLong(1)).map { case (cid, rs) =>
-      cid -> rs.map(r => (r.getLong(0), r.getSeq[Long](3).toArray))
-    }
-    val codebook = (0 until PqM).map { m =>
-      cb.iterator.filter(_.getInt(0) == m)
-        .map(r => r.getLong(1) -> r.getSeq[Double](2).toArray).toMap
-    }
-    val refine = rows.iterator
-      .map(r => r.getLong(0) -> r.getSeq[Double](2).toArray).toMap
-    indexCache.put(dir, Index(cents, members, codebook, refine))
+    val built = buildIndex(rows, cb, metaStride)
+    QueryCache.forget(dir, Set(IndexKind.name))
+    QueryCache.held(dir, IndexKind)(built)
   }
 
   /** Parse [[persistIndex]]'s INDEX_META.json → (corpusN, ivfStride). */

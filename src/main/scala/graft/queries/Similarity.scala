@@ -255,22 +255,16 @@ object Similarity {
   private[graft] def anchorStride(n: Long, bound: Long): Long =
     math.max(PqAnchorStride.toLong, (n + bound - 1) / bound)
 
-  // corpus vector counts memoized per dir (parquet metadata count — a
-  // tiny job, but every ANN query derives 1-2 strides from it)
-  private val corpusVecsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  /** Corpus vector counts, held per dir (a parquet metadata count — a
+    * tiny job, but every ANN query derives 1-2 strides from it).
+    * [[Serving.refresh]] forgets a dir's count after an in-place corpus
+    * change (ADVICE r11: a stale count means a stale stride, and every
+    * quantizer geometry hangs off the stride).
+    */
+  private[graft] val CorpusVecsKind = new QueryCache.Kind[Long]("corpus_vecs")
 
   private[graft] def corpusVecs(s: SparkSession, dir: String): Long =
-    corpusVecsMemo.computeIfAbsent(dir,
-      _ => Tables.embeddings(s, dir).count()).longValue()
-
-  /** Drop `dir`'s memoized corpus count so the next stride derivation
-    * re-counts — the hook [[Serving.refresh]] calls when notified of an
-    * in-place corpus change (ADVICE r11: a stale count means a stale
-    * stride, and every quantizer geometry hangs off the stride).
-    */
-  private[graft] def forgetCorpus(dir: String): Unit =
-    corpusVecsMemo.remove(dir)
+    QueryCache.held(dir, CorpusVecsKind)(Tables.embeddings(s, dir).count())
 
   /** IVF anchor stride for `dir` (nlist ≤ [[IvfNListBound]]). */
   private[graft] def ivfStride(s: SparkSession, dir: String): Long =
@@ -509,15 +503,15 @@ object Similarity {
     * (k=8, seeded, 5 Lloyd iterations) over a [[TrainBudget]]-sized
     * deterministic sample of the unit vectors, replacing s4's
     * every-53rd-vector stand-in with the real training step. The
-    * result is memoized per table dir: training is the one-time
+    * result is held per table dir: training is the one-time
     * index-BUILD cost (every IVF system separates build from probe), and
     * within one Verify/Bench JVM the query body and the side dump must
     * see bit-identical centroids — Lloyd's float accumulation order is
     * partition-dependent, so "retrain and hope" would be a correctness
     * hazard, not just a cost.
     */
-  private val trainedCentroidCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Long, Seq[Double])]]
+  private val CentroidKind =
+    new QueryCache.Kind[Seq[(Long, Seq[Double])]]("trained_centroids")
 
   /** The training knobs the s9 artifact manifest pins — a loaded
     * artifact serves only while these match ([[graft.source
@@ -530,46 +524,28 @@ object Similarity {
 
   private[graft] val CentroidArtifact = "s9_centroids"
 
-  /** Test hook: drop the in-session trained-state caches so the
-    * artifact specs can drive cold-start/load paths deterministically.
+  /** Every kind Similarity keeps in the session memo: the ANN tier
+    * shortlists, the trained centroids and the corpus counts — what a
+    * spec clears to drive the cold-start and load paths.
     */
-  private[graft] def clearTrainedCaches(): Unit = {
-    trainedCentroidCache.clear()
-    QueryCache.clearMemo(tierBuilders.keySet)
-    corpusVecsMemo.clear()
-  }
+  private[graft] lazy val MemoKinds: Set[String] =
+    tierBuilders.keySet + CentroidKind.name + CorpusVecsKind.name
 
   private def trainedCentroids(
       s: SparkSession, dir: String): Seq[(Long, Seq[Double])] =
-    trainedCentroidCache.getOrElseUpdate(dir, {
-      // the session memo is a CACHE OVER STORAGE (VERDICT r8 ask #1):
-      // with an artifact store configured, a committed build is loaded
-      // and served; only a miss (or a params mismatch — stale build)
-      // trains, and the fresh build is persisted for the next session.
-      // Store unset (the gate's default): train in-session as before.
-      import graft.source.ArtifactStore
+    QueryCache.held(dir, CentroidKind) {
+      // the held value is a CACHE OVER STORAGE (VERDICT r8 ask #1).
       // params carry the CORPUS identity too (r14): one shared store
       // root across rehearsal corpora (base vs _dedup, different mults)
-      // must never serve centroids trained on a different corpus —
-      // loadLatestMatching declines on the mismatch and retrains
-      val params = CentroidParams + ("corpus" -> dir)
-      val loaded = ArtifactStore.root(s).flatMap { r =>
-        ArtifactStore
-          .loadLatestMatching(s, r, CentroidArtifact, params)
-          .map(_.select("cent_id", "cent").collect()
-            .map(row => (row.getLong(0), row.getSeq[Double](1)))
-            .toSeq.sortBy(_._1))
-      }
-      loaded.getOrElse {
-        val cents = trainCentroids(s, dir)
-        ArtifactStore.root(s).foreach { r =>
-          import s.implicits._
-          ArtifactStore.save(cents.toDF("cent_id", "cent"), r,
-            CentroidArtifact, params)
-        }
-        cents
-      }
-    })
+      // must never serve centroids trained on a different corpus
+      import s.implicits._
+      graft.source.ArtifactStore.loadOrSave(s, CentroidArtifact,
+          CentroidParams + ("corpus" -> dir)) {
+        trainCentroids(s, dir).toDF("cent_id", "cent")
+      }.select("cent_id", "cent").collect()
+        .map(row => (row.getLong(0), row.getSeq[Double](1)))
+        .toSeq.sortBy(_._1)
+    }
 
   /** The raw Lloyd training step (MLlib k-means over the deterministic
     * sample) — [[trainedCentroids]] adds the memo and artifact layers.
@@ -1557,25 +1533,18 @@ object Similarity {
     * bit-identical to the derivation and the hash gate cannot tell the
     * two paths apart.
     */
-  private[graft] def pqCodebookDf(s: SparkSession, dir: String): DataFrame = {
-    import graft.source.ArtifactStore
-    val params = pqParams(s, dir)
-    val loaded = ArtifactStore.root(s).flatMap(r =>
-      ArtifactStore.loadLatestMatching(s, r, PqCodebookArtifact, params))
-    loaded.getOrElse {
-      val e = Tables.spread(Tables.embeddings(s, dir))
+  private[graft] def pqCodebookDf(s: SparkSession, dir: String): DataFrame =
+    graft.source.ArtifactStore.loadOrSave(s, PqCodebookArtifact,
+        pqParams(s, dir)) {
+      Tables.spread(Tables.embeddings(s, dir))
         .select(col("vec_id"), normalized(col("embedding")).as("unit"))
-      val cb = e.filter(col("vec_id") % pqStride(s, dir) === 0)
+        .filter(col("vec_id") % pqStride(s, dir) === 0)
         .select(col("vec_id"), explode(array((0 until PqM).map(m =>
           struct(lit(m).as("m"),
             slice(col("unit"), m * PqD + 1, PqD).as("sub"))): _*)).as("x"))
         .select(col("x.m").as("m"), col("vec_id").as("cb_id"),
           col("x.sub").as("cvec"))
-      ArtifactStore.root(s).foreach(r =>
-        ArtifactStore.save(cb, r, PqCodebookArtifact, params))
-      cb
     }
-  }
 
   /** PQ frame (vec_id, unit, codes) — codes(m) = id of the subspace-m
     * codebook entry nearest the vector's m-th subvector (min L2, realized

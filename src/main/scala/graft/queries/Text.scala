@@ -2071,59 +2071,45 @@ object Text {
         concat(slice(acc, lit(1), size(acc) - 1), array(lit(bl + br))))
         .otherwise(concat(acc, array(x))))
 
-  /** Session-scoped merge-table memo (the trainedCentroids pattern):
+  /** The session-held merge table (the trainedCentroids pattern):
     * training is the one-time model-BUILD cost — the merge table is a
     * bounded (k-row), deterministic artifact of the corpus, so within
     * one JVM t28, t30, and any repeat ask train ONCE and replay. Keyed
     * on the shuffle-partition layout so the partition-invariance sweep
     * still exercises the real loop.
     */
-  private val bpeMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Seq[(Long, String, String, Long)]]
+  private[graft] val BpeKind =
+    new QueryCache.Kind[Seq[(Long, String, String, Long)]]("bpe_merges")
 
   private[graft] val BpeArtifact = "t28_bpe_merges"
   private[graft] val BpeParams = Map("rounds" -> BpeRounds.toString)
 
-  /** Test hook for the artifact specs (QueryCache.clearMemo's sibling). */
-  private[graft] def clearBpeMemo(): Unit = bpeMemo.clear()
-
-  /** Queries whose cost the [[bpeMemo]] trained-artifact memo absorbs
-    * after first training — Bench re-times these raw, clearing the memo
-    * per run (the memo deliberately ignores the raw-measurement conf:
-    * it stands in for an input loaded from storage, so Bench's raw pass
-    * resets it explicitly instead). t30 is NOT here: applying a loaded
-    * merge table is its production shape, so its memo-on row (apply
-    * cost only) is already the honest number.
+  /** Queries whose cost the [[BpeKind]] merge table absorbs after first
+    * training — Bench re-times these raw, clearing that kind per run
+    * (held values ignore the raw-measurement conf: the table stands in
+    * for an input loaded from storage, so Bench's raw pass resets it
+    * explicitly instead). t30 is NOT here: applying a loaded merge
+    * table is its production shape, so its memo-on row (apply cost
+    * only) is already the honest number.
     */
   val memoizedNames: Set[String] = Set("t28_bpe_train")
 
   private def bpeMerges(s: SparkSession, dir: String)
       : Seq[(Long, String, String, Long)] =
-    bpeMemo.getOrElseUpdate(
-      (dir, s.conf.get("spark.sql.shuffle.partitions", "")), {
-        // memo over storage (VERDICT r8 ask #1): a committed merge-table
-        // artifact with a matching round budget serves; a miss trains
-        // and persists. Store unset (the gate default): train in-session.
-        import graft.source.ArtifactStore
-        val loaded = ArtifactStore.root(s).flatMap { r =>
-          ArtifactStore.loadLatestMatching(s, r, BpeArtifact, BpeParams)
-            .map(_.collect()
-              .map(x => (x.getLong(0), x.getString(1), x.getString(2),
-                x.getLong(3)))
-              .toSeq.sortBy(_._1)) // training order — t30 replays the
-                                   // merges as a fold, order is semantics
-        }
-        loaded.getOrElse {
-          val merges = bpeTrainLoop(s, dir, BpeRounds)
-          ArtifactStore.root(s).foreach { r =>
-            import s.implicits._
-            ArtifactStore.save(
-              merges.toDF("step", "merge_left", "merge_right", "pair_n"),
-              r, BpeArtifact, BpeParams)
-          }
-          merges
-        }
-      })
+    QueryCache.held(dir, BpeKind, QueryCache.layout(s)) {
+      // held over storage (VERDICT r8 ask #1); the params carry the
+      // corpus, so one store root shared by two corpora never serves
+      // one corpus the other's merges
+      import s.implicits._
+      graft.source.ArtifactStore.loadOrSave(s, BpeArtifact,
+          BpeParams + ("corpus" -> dir)) {
+        bpeTrainLoop(s, dir, BpeRounds)
+          .toDF("step", "merge_left", "merge_right", "pair_n")
+      }.collect()
+        .map(x => (x.getLong(0), x.getString(1), x.getString(2), x.getLong(3)))
+        .toSeq.sortBy(_._1) // training order — t30 replays the merges as
+                            // a fold, order is semantics
+    }
 
   /** t29's weight vector: 512 buckets, w(j) = (((j·2654435761) mod
     * 1000003) mod 1001 − 500) / 1024 — a deterministic integer formula
@@ -2149,23 +2135,13 @@ object Text {
     * so the two paths are bit-identical under the hash gate.
     */
   private[graft] def qualityWeightsFor(s: SparkSession): Seq[Double] = {
-    import graft.source.ArtifactStore
-    val loaded = ArtifactStore.root(s).flatMap { r =>
-      ArtifactStore.loadLatestMatching(
-          s, r, QualityWeightsArtifact, QualityWeightsParams)
-        .map(_.collect().map(x => (x.getInt(0), x.getDouble(1)))
-          .sortBy(_._1).map(_._2).toSeq)
-    }
-    loaded.getOrElse {
-      ArtifactStore.root(s).foreach { r =>
-        import s.implicits._
-        ArtifactStore.save(
-          QualityWeights.zipWithIndex.map { case (w, j) => (j, w) }
-            .toDF("bucket", "w"),
-          r, QualityWeightsArtifact, QualityWeightsParams)
-      }
-      QualityWeights
-    }
+    import s.implicits._
+    graft.source.ArtifactStore.loadOrSave(s, QualityWeightsArtifact,
+        QualityWeightsParams) {
+      QualityWeights.zipWithIndex.map { case (w, j) => (j, w) }
+        .toDF("bucket", "w")
+    }.collect().map(x => (x.getInt(0), x.getDouble(1)))
+      .sortBy(_._1).map(_._2).toSeq
   }
 
   /** The t28/t30-shared oracle CTE: the full BPE merge loop as one

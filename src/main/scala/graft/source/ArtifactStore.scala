@@ -32,7 +32,9 @@ import graft.util.Json
   * k-means, merge-round budget for BPE, …) — a loader that finds
   * params diverging from its own constants is looking at a stale
   * build and should retrain rather than silently serve it
-  * ([[loadLatestMatching]] enforces exactly that).
+  * ([[loadLatestMatching]] enforces exactly that). Trainers go through
+  * [[loadOrSave]]: serve the matching committed build, or build, save
+  * and serve the fresh one.
   *
   * Scale notes: artifacts are BOUNDED by construction (8 centroids,
   * M·K codebook rows, k merge rows, a 512-float weight table) — KBs
@@ -134,14 +136,7 @@ object ArtifactStore {
     val f = fs(s, mPath)
     if (!f.exists(mPath)) return None
     val in = f.open(mPath)
-    val raw =
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val tmp = new Array[Byte](4096)
-        var n = in.read(tmp)
-        while (n >= 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-        new String(buf.toByteArray, "UTF-8")
-      } finally in.close()
+    val raw = try new String(in.readAllBytes(), "UTF-8") finally in.close()
     parseManifest(raw)
   }
 
@@ -217,4 +212,21 @@ object ArtifactStore {
             m.params.get(k).contains(x) } =>
           s.read.parquet(new Path(versionDir(root, name, v), "data").toString)
       }
+
+  /** The build-once / load-many step every trainer shares. Store unset:
+    * `build`. Store set: the newest committed `name` whose manifest
+    * matches `params` ([[loadLatestMatching]]), else `build`, saved as
+    * the next version and served as built.
+    */
+  def loadOrSave(s: SparkSession, name: String, params: Map[String, String])(
+      build: => DataFrame): DataFrame =
+    root(s) match {
+      case None => build
+      case Some(r) =>
+        loadLatestMatching(s, r, name, params).getOrElse {
+          val df = build
+          save(df, r, name, params)
+          df
+        }
+    }
 }

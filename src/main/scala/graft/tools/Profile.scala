@@ -23,8 +23,8 @@ object Profile {
       val fn = graft.SparkEntry.queries(n)
       // warm-up run: JIT/codegen, then profile the steady-state run
       (1 to runs).foreach { r =>
-        graft.queries.QueryCache.clearMemo(graft.queries.Dedup.MemoKinds)
-        graft.queries.Text.clearBpeMemo()
+        graft.queries.QueryCache.clearMemo(graft.queries.Dedup.MemoKinds +
+          graft.queries.Text.BpeKind.name)
         spark.catalog.clearCache()
         val (_, work) = SparkWork.measure(spark) {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()

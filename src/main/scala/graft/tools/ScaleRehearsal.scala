@@ -537,8 +537,8 @@ object ScaleRehearsal {
     val out = if (!dedupFirst) base else ensureDedupFirst(spark, base)
     val nVecs = spark.read.parquet(s"$out/embeddings.parquet").count()
     def topIds(name: String): (Seq[Long], Double) = {
-      graft.queries.QueryCache.clearMemo(graft.queries.Dedup.MemoKinds)
-      Similarity.clearTrainedCaches()
+      graft.queries.QueryCache.clearMemo(graft.queries.Dedup.MemoKinds ++
+        Similarity.MemoKinds)
       spark.catalog.clearCache()
       val t0 = System.nanoTime()
       val ids = graft.SparkEntry.queries(name)(spark, out)
@@ -573,8 +573,8 @@ object ScaleRehearsal {
         .map(_._2.toSet).getOrElse(Set.empty[Long])
       val missed18 = (exactSet -- s18ids).toSeq.sorted
       val s18probe = {
-        graft.queries.QueryCache.clearMemo(graft.queries.Dedup.MemoKinds)
-        Similarity.clearTrainedCaches()
+        graft.queries.QueryCache.clearMemo(graft.queries.Dedup.MemoKinds ++
+          Similarity.MemoKinds)
         spark.catalog.clearCache()
         // counterfactual: the PRE-adoption family width (the gated s18
         // now runs at ShortlistKBinary = 2×) — keeps the attribution
@@ -652,8 +652,8 @@ object ScaleRehearsal {
     // brute-forced on the constructed-flood spec fixture
     // (DedupSimilaritySpec); organic records emissions only.
     val s3row = {
-      graft.queries.QueryCache.clearMemo(graft.queries.Dedup.MemoKinds)
-      Similarity.clearTrainedCaches()
+      graft.queries.QueryCache.clearMemo(graft.queries.Dedup.MemoKinds ++
+        Similarity.MemoKinds)
       spark.catalog.clearCache()
       val t0 = System.nanoTime()
       val pairs = graft.SparkEntry.queries("s3_ann_srp")(spark, out)
@@ -743,8 +743,8 @@ object ScaleRehearsal {
       "organic_dedup" -> ensureDedupFirst(spark, base))
     val tiers = Seq("s4_ivf_knn", "s9_ivf_trained", "s17_ivfpq_knn")
     def clearAll(): Unit = {
-      graft.queries.QueryCache.clearMemo(graft.queries.Dedup.MemoKinds)
-      Similarity.clearTrainedCaches()
+      graft.queries.QueryCache.clearMemo(graft.queries.Dedup.MemoKinds ++
+        Similarity.MemoKinds)
       spark.catalog.clearCache()
     }
     def topIds(name: String, out: String): (Set[Long], Double) = {
@@ -794,9 +794,8 @@ object ScaleRehearsal {
     val base = ensureOrganic(spark, mult)
     val out = s"target/rehearsal/organic_x${mult}_ddfirst"
     def freshAll(): Unit = {
-      graft.queries.QueryCache.clearMemo(graft.queries.Dedup.MemoKinds)
-      Similarity.clearTrainedCaches()
-      Serving.clearIndexCache()
+      graft.queries.QueryCache.clearMemo(graft.queries.Dedup.MemoKinds ++
+        Similarity.MemoKinds + Serving.IndexKind.name)
       spark.catalog.clearCache()
     }
     if (!exists(s"$out/embeddings.parquet")) {
@@ -975,7 +974,6 @@ object ScaleRehearsal {
       // check must run and decline organically, which is the point
       val times = (1 to runs).map { _ =>
         graft.queries.QueryCache.clearMemo()
-        graft.queries.Similarity.clearTrainedCaches()
         spark.catalog.clearCache()
         val t0 = System.nanoTime()
         val df = fn(spark, out)

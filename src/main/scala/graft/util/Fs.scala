@@ -89,4 +89,30 @@ object Fs {
     val p = new Path(path)
     p.getFileSystem(conf).delete(p, true); ()
   }
+
+  /** One shutdown hook for every dir [[removeAtExit]] registers in this
+    * JVM (idempotent map — a hook per call would grow the JVM's hook
+    * list unboundedly in a long spec session). Each dir keeps the
+    * Hadoop conf captured at registration (with any `fs.s3a.*`
+    * credentials), and the hook runs through Hadoop's
+    * ShutdownHookManager ABOVE the FileSystem cache's close priority — a
+    * plain `Runtime.addShutdownHook` races `FileSystem.closeAll` and can
+    * find every FS already closed.
+    */
+  private val exitDirs =
+    new java.util.concurrent.ConcurrentHashMap[String, Configuration]()
+  private lazy val exitHook: Unit =
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+      new Runnable {
+        def run(): Unit = exitDirs.forEach { (d, conf) =>
+          try rmTree(conf, d)
+          catch { case _: Exception => () } // best-effort tmp hygiene
+        }
+      },
+      FileSystem.SHUTDOWN_HOOK_PRIORITY + 30)
+
+  /** Delete `dir` (any Hadoop scheme) when the JVM exits. */
+  def removeAtExit(spark: SparkSession, dir: String): Unit = {
+    exitHook; exitDirs.put(dir, spark.sessionState.newHadoopConf()); ()
+  }
 }

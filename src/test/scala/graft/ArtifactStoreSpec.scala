@@ -89,6 +89,34 @@ class ArtifactStoreSpec extends SparkSuite {
       "the committed v2 manifest was destroyed")
   }
 
+  test("loadOrSave builds only without a matching committed version") {
+    import spark.implicits._
+    var builds = 0
+    def build(id: Long) = { builds += 1; Seq((id, 0.5)).toDF("id", "w") }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).toSeq
+    // store unset: the build serves and nothing is written
+    val unused = freshRoot()
+    assert(rows(ArtifactStore.loadOrSave(spark, "los", Map("k" -> "1"))(
+      build(1L))) == Seq("[1,0.5]"))
+    assert(builds == 1 && new java.io.File(unused).list().isEmpty)
+    // empty root: one build, saved as v1
+    val root = freshRoot()
+    withStore(root)(ArtifactStore.loadOrSave(spark, "los",
+      Map("k" -> "1"))(build(1L)))
+    assert(builds == 2)
+    assert(ArtifactStore.versions(spark, root, "los") == Seq(1))
+    // matching params: no build, the saved rows serve
+    assert(rows(withStore(root)(ArtifactStore.loadOrSave(spark, "los",
+      Map("k" -> "1"))(build(9L)))) == Seq("[1,0.5]"))
+    assert(builds == 2, "a matching committed version was rebuilt")
+    // mismatched params: a build, saved as v2
+    assert(rows(withStore(root)(ArtifactStore.loadOrSave(spark, "los",
+      Map("k" -> "2"))(build(2L)))) == Seq("[2,0.5]"))
+    assert(builds == 3)
+    assert(ArtifactStore.versions(spark, root, "los") == Seq(1, 2))
+  }
+
   test("manifest escaping survives hostile param values") {
     val raw = ArtifactStore.parseManifest(
       """{"name": "x", "version": 3, "rows": 7, """ +
@@ -99,13 +127,13 @@ class ArtifactStoreSpec extends SparkSuite {
 
   test("s9 centroids: store→load→serve == in-session train") {
     val root = freshRoot()
-    graft.queries.Similarity.clearTrainedCaches()
+    graft.queries.QueryCache.clearMemo(graft.queries.Similarity.MemoKinds)
     val trained = withStore(root)(collectSorted("s9_ivf_trained"))
     assert(ArtifactStore.versions(spark, root,
       graft.queries.Similarity.CentroidArtifact) == Seq(1))
     // cold "session": memo cleared, so the query can only answer from
     // the stored artifact — and must answer identically
-    graft.queries.Similarity.clearTrainedCaches()
+    graft.queries.QueryCache.clearMemo(graft.queries.Similarity.MemoKinds)
     val served = withStore(root)(collectSorted("s9_ivf_trained"))
     assert(served == trained, "served-from-artifact s9 diverges")
     // no retrain happened: still exactly one version. (No storeless
@@ -114,43 +142,61 @@ class ArtifactStoreSpec extends SparkSuite {
     // centroids stable ACROSS sessions, which is exactly the pin above.)
     assert(ArtifactStore.versions(spark, root,
       graft.queries.Similarity.CentroidArtifact) == Seq(1))
-    graft.queries.Similarity.clearTrainedCaches()
+    graft.queries.QueryCache.clearMemo(graft.queries.Similarity.MemoKinds)
   }
 
   test("s8/s17 PQ codebook: store→load→serve == in-session derivation") {
     val root = freshRoot()
-    graft.queries.Similarity.clearTrainedCaches()
+    graft.queries.QueryCache.clearMemo(graft.queries.Similarity.MemoKinds)
     val built = withStore(root)(
       (collectSorted("s8_pq_knn"), collectSorted("s17_ivfpq_knn")))
     assert(ArtifactStore.versions(spark, root,
       graft.queries.Similarity.PqCodebookArtifact).nonEmpty)
-    graft.queries.Similarity.clearTrainedCaches()
+    graft.queries.QueryCache.clearMemo(graft.queries.Similarity.MemoKinds)
     val served = withStore(root)(
       (collectSorted("s8_pq_knn"), collectSorted("s17_ivfpq_knn")))
     assert(served == built, "served-from-artifact s8/s17 diverge")
-    graft.queries.Similarity.clearTrainedCaches()
+    graft.queries.QueryCache.clearMemo(graft.queries.Similarity.MemoKinds)
     val storeless = (collectSorted("s8_pq_knn"), collectSorted("s17_ivfpq_knn"))
     assert(storeless == built, "artifact path diverges from storeless path")
-    graft.queries.Similarity.clearTrainedCaches()
+    graft.queries.QueryCache.clearMemo(graft.queries.Similarity.MemoKinds)
   }
 
   test("t28/t30 BPE merges: store→load→serve == in-session train") {
     val root = freshRoot()
-    graft.queries.Text.clearBpeMemo()
+    graft.queries.QueryCache.clearMemo(Set(graft.queries.Text.BpeKind.name))
     val trained = withStore(root)(
       (collectSorted("t28_bpe_train"), collectSorted("t30_bpe_apply")))
     assert(ArtifactStore.versions(spark, root,
       graft.queries.Text.BpeArtifact) == Seq(1))
-    graft.queries.Text.clearBpeMemo()
+    graft.queries.QueryCache.clearMemo(Set(graft.queries.Text.BpeKind.name))
     val served = withStore(root)(
       (collectSorted("t28_bpe_train"), collectSorted("t30_bpe_apply")))
     assert(served == trained, "served-from-artifact t28/t30 diverge")
     assert(ArtifactStore.versions(spark, root,
       graft.queries.Text.BpeArtifact) == Seq(1), "load path retrained")
-    graft.queries.Text.clearBpeMemo()
+    graft.queries.QueryCache.clearMemo(Set(graft.queries.Text.BpeKind.name))
     assert((collectSorted("t28_bpe_train"), collectSorted("t30_bpe_apply"))
       == trained)
-    graft.queries.Text.clearBpeMemo()
+    graft.queries.QueryCache.clearMemo(Set(graft.queries.Text.BpeKind.name))
+  }
+
+  test("t28/t30 BPE merges: one root shared by two corpora serves each " +
+    "its own merges") {
+    def bpe(dir: String): Seq[Seq[String]] =
+      Seq("t28_bpe_train", "t30_bpe_apply").map(q => SparkEntry.queries(q)(
+        spark, dir).collect().map(_.toString).sorted.toSeq)
+    val big = new java.io.File(sf).getParent + "/sf0.01"
+    graft.queries.QueryCache.clearMemo(Set(graft.queries.Text.BpeKind.name))
+    val storeless = bpe(big)
+    graft.queries.QueryCache.clearMemo(Set(graft.queries.Text.BpeKind.name))
+    val root = freshRoot()
+    val served = withStore(root) { bpe(sf); bpe(big) }
+    assert(served == storeless,
+      "the second corpus was served the first corpus's merges")
+    assert(ArtifactStore.versions(spark, root,
+      graft.queries.Text.BpeArtifact) == Seq(1, 2))
+    graft.queries.QueryCache.clearMemo(Set(graft.queries.Text.BpeKind.name))
   }
 
   test("streamed IVF assignment serves from the stored centroid artifact") {
@@ -160,7 +206,7 @@ class ArtifactStoreSpec extends SparkSuite {
     import graft.functions.VectorFunctions.normalized
     import org.apache.spark.sql.functions.col
     val root = freshRoot()
-    graft.queries.Similarity.clearTrainedCaches()
+    graft.queries.QueryCache.clearMemo(graft.queries.Similarity.MemoKinds)
     // train + persist the quantizer through the gated s9 path
     withStore(root)(collectSorted("s9_ivf_trained"))
     // the streaming maintainer loads the ARTIFACT — no retraining, no
@@ -197,7 +243,7 @@ class ArtifactStoreSpec extends SparkSuite {
         "streamed artifact-fed assignment diverges from static")
       assert(streamed.map(_._2).size > 1, "single-cell fixture — vacuous")
     } finally q.stop()
-    graft.queries.Similarity.clearTrainedCaches()
+    graft.queries.QueryCache.clearMemo(graft.queries.Similarity.MemoKinds)
   }
 
   test("t29 weights: store→load→serve == in-session formula") {

@@ -34,8 +34,8 @@ class BenchCeilingSpec extends SparkSuite {
     df.write.format("noop").mode("overwrite").save()
 
   private def freshState(): Unit = {
-    graft.queries.QueryCache.clearMemo(graft.queries.Dedup.MemoKinds)
-    graft.queries.Text.clearBpeMemo()
+    graft.queries.QueryCache.clearMemo(graft.queries.Dedup.MemoKinds +
+      graft.queries.Text.BpeKind.name)
     spark.catalog.clearCache()
   }
 

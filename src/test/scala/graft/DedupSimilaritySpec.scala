@@ -1038,8 +1038,8 @@ class DedupSimilaritySpec extends SparkSuite {
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
 
   private def freshCaches(): Unit = {
-    graft.queries.QueryCache.clearMemo(graft.queries.Dedup.MemoKinds)
-    graft.queries.Similarity.clearTrainedCaches()
+    graft.queries.QueryCache.clearMemo(graft.queries.Dedup.MemoKinds ++
+      graft.queries.Similarity.MemoKinds)
     spark.catalog.clearCache()
   }
 

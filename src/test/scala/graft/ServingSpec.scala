@@ -56,8 +56,8 @@ class ServingSpec extends SparkSuite {
       .createTempDirectory("graft-serve-art").toString
     spark.conf.set(ArtifactStore.DirKey, root)
     try {
-      graft.queries.Similarity.clearTrainedCaches()
-      graft.queries.Serving.clearIndexCache()
+      graft.queries.QueryCache.clearMemo(graft.queries.Similarity.MemoKinds +
+        Serving.IndexKind.name)
       // v1: first gated run derives + persists the codebook; serving
       // parity against it
       assert(Serving.serve(spark, sf, emb(sf, 0L), k = 10,
@@ -75,15 +75,15 @@ class ServingSpec extends SparkSuite {
       assert(ArtifactStore.versions(spark, root, cbName) == Seq(1, 2))
       // a refreshed server and a cold batch run must agree ON V2 —
       // neither side may keep serving the stale build
-      graft.queries.Similarity.clearTrainedCaches()
+      graft.queries.QueryCache.clearMemo(graft.queries.Similarity.MemoKinds)
       Serving.refresh(sf)
       assert(Serving.serve(spark, sf, emb(sf, 0L), k = 10,
         excludeId = 0L) == s17Rows(sf),
         "serving and batch diverge after the codebook reship")
     } finally {
       spark.conf.unset(ArtifactStore.DirKey)
-      graft.queries.Similarity.clearTrainedCaches()
-      graft.queries.Serving.clearIndexCache()
+      graft.queries.QueryCache.clearMemo(graft.queries.Similarity.MemoKinds +
+        Serving.IndexKind.name)
     }
   }
 
@@ -117,14 +117,14 @@ class ServingSpec extends SparkSuite {
     assert(cellDirs != null && cellDirs.exists(_.startsWith("cent_id=")),
       s"cells are not partitioned by cent_id: ${cellDirs.mkString(",")}")
     // cold start: wipe every in-memory trace, rebuild from files only
-    Serving.clearIndexCache()
-    graft.queries.Similarity.clearTrainedCaches()
+    graft.queries.QueryCache.clearMemo(graft.queries.Similarity.MemoKinds +
+      Serving.IndexKind.name)
     Serving.loadIndexInto(spark, sf, path)
     val served = Serving.serve(spark, sf, emb(sf, 0L), k = 10,
       excludeId = 0L)
     assert(served == batch,
       "cold-started (files-only) serving diverges from s17")
-    Serving.clearIndexCache()
+    graft.queries.QueryCache.clearMemo(Set(Serving.IndexKind.name))
   }
 
   test("refresh forgets the corpus count; index geometry travels as " +
@@ -138,9 +138,10 @@ class ServingSpec extends SparkSuite {
     // is the silent-empty-serve failure this pins against.
     val dir = java.nio.file.Files
       .createTempDirectory("graft-serve-refresh").toString
-    // no artifact store for this fixture: the codebook params (M, D,
-    // stride) don't pin corpus identity, so a store left configured by
-    // another test would cross-pollinate builds across corpora
+    // no artifact store for this fixture: its corpus changes in place
+    // under one dir, and the codebook params pin the corpus by dir, so
+    // a store left configured by another test would serve the first
+    // corpus's codebook to the second
     val prevRoot =
       spark.conf.getOption(graft.source.ArtifactStore.DirKey)
     spark.conf.unset(graft.source.ArtifactStore.DirKey)
@@ -164,8 +165,8 @@ class ServingSpec extends SparkSuite {
     assert(Serving.centCount(spark, dir) == expectCents,
       "rebuilt index centroids off the refreshed stride")
     } finally {
-      Serving.clearIndexCache()
-      Similarity.forgetCorpus(dir)
+      graft.queries.QueryCache.clearMemo(Set(Serving.IndexKind.name))
+      graft.queries.QueryCache.forget(dir, Set(Similarity.CorpusVecsKind.name))
       prevRoot.foreach(
         spark.conf.set(graft.source.ArtifactStore.DirKey, _))
     }
@@ -204,7 +205,7 @@ class ServingSpec extends SparkSuite {
       Serving.loadIndexInto(spark, sf, path)
     }
     assert(err2.getMessage.contains("inconsistent"), err2.getMessage)
-    Serving.clearIndexCache()
+    graft.queries.QueryCache.clearMemo(Set(Serving.IndexKind.name))
   }
 
   test("knobs: k/nprobe/shortlist bound the work; excludeId drops self") {
@@ -298,7 +299,7 @@ class ServingSpec extends SparkSuite {
     // build is idempotent and publication is safe, so every thread must
     // still answer exactly the single-threaded reference. (Latency is
     // NOT measured here: a racing thread pays the index build.)
-    graft.queries.Serving.clearIndexCache()
+    graft.queries.QueryCache.clearMemo(Set(Serving.IndexKind.name))
     val cold = (0 until 32).map { t =>
       pool.submit(new Runnable {
         def run(): Unit = {
@@ -359,9 +360,8 @@ class ServingSpec extends SparkSuite {
     val idxPath = java.nio.file.Files
       .createTempDirectory("graft-dedupserve-idx").toString
     def freshAll(): Unit = {
-      graft.queries.QueryCache.clearMemo(graft.queries.Dedup.MemoKinds)
-      Similarity.clearTrainedCaches()
-      Serving.clearIndexCache()
+      graft.queries.QueryCache.clearMemo(graft.queries.Dedup.MemoKinds ++
+        Similarity.MemoKinds + Serving.IndexKind.name)
       spark.catalog.clearCache()
     }
     try {
